@@ -25,22 +25,21 @@ import subprocess
 import sys
 import time
 
-sys.dont_write_bytecode = True
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-import oracle  # noqa: E402
-
 T0 = time.monotonic()
 WORKLOADS = ["relay_live", "relay_backlog", "lake_queries"]
 UNITS = [
-    (r"_ms(_per_100k)?$", "ms"), (r"^events_per_s$", "1/s"), (r"_s(_per_pass)?$", "s"),
+    (r"_ms(_per_100k)?$", "ms"), (r"_s(_per_pass)?$", "s"),
     (r"_us_per_event$", "us"), (r"_bytes_per_(event|pass)$", "B"), (r"_share$", "ratio"),
 ]
 BUILD = ".bench_build"
+XCHECK = "tools/xcheck.py"
 JVM_LIMIT_S = 170
-# The JVM stops at the C1 compiler: C2 keeps recompiling the per-batch and
-# per-query paths for longer than a run lasts, so a C2 run times a slope
-# (relay_live batch latency fell from 1.5 s to 0.56 s over 70 batches);
-# under C1 the cost per operation is flat after about ten batches.
+# The JVM stops at the C1 compiler, so every figure is a C1 figure and can
+# rank a change differently from the program's default tiered JIT (see
+# perfbench/README.md). Under the default JIT, C2 kept recompiling for
+# longer than a run can last (relay_live for 86 batches, relay_backlog
+# for 8 drains, lake_queries for 13 passes), so a run timed a slope; under
+# C1 the cost per operation is flat after about ten batches.
 JIT = ["-XX:TieredStopAtLevel=1"]
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -163,10 +162,36 @@ def run_jvm(classes, jars, workload, seed, seconds, trace, smoke, sf_dir):
         shutil.rmtree(work, ignore_errors=True)
 
 
+def oracle_verdicts(sf_dir, out_dir):
+    """{query name: None if its output matches its DuckDB oracle, else the
+    reason}, from the repo's own cross-check, tools/xcheck.py, which prints
+    `PASS <name>` or `FAIL <name>: <reason>` per query. A query without
+    such a line fails, and so does every query when the check exits
+    non-zero without a FAIL line."""
+    with open(os.path.join(out_dir, "oracle_sql.json")) as f:
+        verdict = {n: f"{XCHECK} printed no verdict" for n in json.load(f)}
+    try:
+        p = subprocess.run([sys.executable, XCHECK, sf_dir, out_dir], stdout=subprocess.PIPE,
+                           stderr=subprocess.STDOUT, text=True,
+                           timeout=max(5, JVM_LIMIT_S + 5 - (time.monotonic() - T0)))
+    except subprocess.TimeoutExpired:
+        return {n: f"{XCHECK} did not finish" for n in verdict}
+    failed = False
+    for line in p.stdout.splitlines():
+        m = re.match(r"(PASS|FAIL) ([^\s:]+)(.*)", line)
+        if m and m.group(2) in verdict:
+            failed |= m.group(1) == "FAIL"
+            verdict[m.group(2)] = None if m.group(1) == "PASS" else m.group(3).lstrip(": ")
+    if p.returncode != 0 and not failed:
+        tail = p.stdout[-300:].replace("\n", " ")
+        return {n: f"{XCHECK} exited with {p.returncode}: {tail}" for n in verdict}
+    return verdict
+
+
 def lake_check(res, out_dir, sf_dir):
     """Counts every run of a query whose output differs from its oracle
     as a failed operation."""
-    verdict = oracle.check(sf_dir, out_dir)
+    verdict = oracle_verdicts(sf_dir, out_dir)
     bad = sorted(set(n for n, v in verdict.items() if v) - set(res["failed_names"]))
     for n in bad:
         res["context"].append(f"oracle mismatch {n}: {verdict[n]}"[:400])
@@ -204,6 +229,8 @@ def main():
     if not a.smoke and not a.workload:
         ap.error("--workload is required unless --smoke is given")
     jars = spark_jars()
+    if not os.path.isfile(XCHECK):
+        fail(f"no {XCHECK} here: the lake outputs cannot be checked")
     classes = build(jars)
     global T0
     T0 = time.monotonic()  # the build is allowed its own time budget

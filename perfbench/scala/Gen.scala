@@ -14,11 +14,11 @@ import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
   *
   * Input properties vary per segment (one live batch, or one slice of a
   * backlog), each drawn from the seed: number of topics, key skew, key
-  * type, payload width and string length, the ExtJSON type tags in use.
-  * Per event it draws the op: the four document ops, key-less
-  * `invalidate` / `drop` / `dropDatabase`, and malformed lines. Because
-  * the mixture is the same for every seed, a run's aggregate figures do
-  * not depend on which seed drew it.
+  * type, payload width and string length, the ExtJSON type tags in use,
+  * and the op mix. Per event it draws the op from its segment's mix: the
+  * four document ops, key-less `invalidate` / `drop` / `dropDatabase`,
+  * and malformed lines. Because the mixture is the same for every seed, a
+  * run's aggregate figures do not depend on which seed drew it.
   */
 object Gen {
   private val nf = JsonNodeFactory.instance
@@ -32,13 +32,22 @@ object Gen {
   private val Tags = Vector("oid", "date", "long", "int", "double", "decimal",
     "binary", "string", "bool", "null", "array", "doc")
 
-  /** Op draw: cumulative weights (per mille). */
-  private val Ops = Vector(
-    "insert" -> 330, "update" -> 330, "replace" -> 100, "delete" -> 130,
-    "invalidate" -> 20, "drop" -> 20, "dropDatabase" -> 10, "malformed" -> 60)
-  private val OpCdf = Ops.scanLeft(0)(_ + _._2).tail
-  require(OpCdf.last == 1000)
+  val OpNames = Vector("insert", "update", "replace", "delete",
+    "invalidate", "drop", "dropDatabase", "malformed")
   val DocumentOps = Set("insert", "update", "replace", "delete")
+
+  /** Op-mix levels, per mille in the order of `OpNames`. No measured
+    * distribution of change-stream traffic backs any single mix, so the
+    * levels span three kinds of collection: append-mostly (logs, events),
+    * update-mostly (sessions, stock) and churn (deletes and collection or
+    * database drops). Every segment draws one level, cycled like the
+    * other properties; each level keeps every op kind present.
+    */
+  val OpMixes: Vector[(String, Vector[Int])] = Vector(
+    "insert_heavy" -> Vector(800, 80, 20, 30, 10, 10, 5, 45),
+    "update_heavy" -> Vector(100, 650, 120, 60, 10, 10, 5, 45),
+    "churn" -> Vector(150, 150, 50, 450, 60, 60, 30, 50))
+  OpMixes.foreach { case (n, w) => require(w.size == OpNames.size && w.sum == 1000, n) }
 
   /** Fisher-Yates shuffle driven by the seeded generator. */
   def shuffle[T](rng: SplittableRandom, xs: Seq[T]): Vector[T] = {
@@ -49,7 +58,7 @@ object Gen {
 
   final case class Profile(topics: Vector[(String, String)], keySpace: Int,
       skew: Double, keyKind: Int, shardKey: Boolean, fields: Int,
-      strWords: Int, tags: Vector[String])
+      strWords: Int, tags: Vector[String], opMix: Vector[Int])
 
   /** Draws segment profiles. Each property cycles through all of its
     * levels in a seeded order before any level repeats, so every run
@@ -74,6 +83,7 @@ object Gen {
     private val fields = new Deck((2 to 21).toVector)
     private val strWords = new Deck((1 to 12).toVector)
     private val tagCount = new Deck((4 to Tags.size).toVector)
+    private val opMix = new Deck(OpMixes.map(_._2))
 
     def next(): Profile = {
       val n = topics.next()
@@ -82,7 +92,8 @@ object Gen {
         topics = shuffle(rng, all).take(n),
         keySpace = keySpace.next(), skew = skew.next(), keyKind = keyKind.next(),
         shardKey = shardKey.next(), fields = fields.next(), strWords = strWords.next(),
-        tags = shuffle(rng, Tags).take(tagCount.next()))
+        tags = shuffle(rng, Tags).take(tagCount.next()),
+        opMix = opMix.next())
     }
   }
 
@@ -183,9 +194,11 @@ object Gen {
       d
     }
 
+    private val opCdf = p.opMix.scanLeft(0)(_ + _).tail
+
     private def op(): String = {
       val r = rng.nextInt(1000)
-      Ops(OpCdf.indexWhere(r < _))._1
+      OpNames(opCdf.indexWhere(r < _))
     }
 
     /** One line of the event file, and the relay row it must produce. */
