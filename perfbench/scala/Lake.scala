@@ -6,7 +6,9 @@ import java.util.SplittableRandom
 
 import scala.collection.mutable
 
-import graft.SparkEntry
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.{GraftFunctions, SparkEntry}
 import graft.queries.SessionMemo
 
 /** The batch query engine: a fixed set of declared queries, each with a
@@ -26,9 +28,9 @@ object Lake {
     "rel_q6", "ts_tumble", "cdc_latest_state", "vec_knn", "mm_image_stats",
     "pipeline_curate")
 
-  final case class Sizes(minPasses: Int, maxPasses: Int)
-  val Full = Sizes(minPasses = 2, maxPasses = 40)
-  val Smoke = Sizes(minPasses = 1, maxPasses = 1)
+  final case class Sizes(setups: Int, minPasses: Int, maxPasses: Int)
+  val Full = Sizes(setups = 4, minPasses = 2, maxPasses = 40)
+  val Smoke = Sizes(setups = 2, minPasses = 1, maxPasses = 1)
 
   def run(ctx: Ctx, sz: Sizes, sfDir: String): Result = {
     val spark = ctx.spark
@@ -38,76 +40,53 @@ object Lake {
     val rng = new SplittableRandom(ctx.seed)
     /** The seed fixes the order of the queries within each pass. */
     def order(): Seq[String] = Gen.shuffle(rng, QuerySet)
-    val counter = new TaskCounter
-    spark.sparkContext.addSparkListener(counter)
     val failedQueries = mutable.Set.empty[String]
     val outDir = ctx.work.resolve("lake_out")
-
-    // untimed pass: every output lands as parquet for the oracle check
-    order().foreach { name =>
-      try Trace.span(s"queries.$name", 0) {
-        declared(name).fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(outDir.resolve(name).toString)
-      } catch { case e: Exception =>
+    def runQuery(s: SparkSession, name: String, pass: Int)(write: DataFrame => Unit): Unit =
+      try Trace.span(s"queries.$name", pass)(write(declared(name).fn(s, sfDir)))
+      catch { case e: Exception =>
         System.err.println(s"[perfbench] $name failed: ${e.getMessage}")
         failedQueries += name
       }
-    }
+
+    // untimed pass: every output lands as parquet for the oracle check
+    order().foreach(name => runQuery(spark, name, 0)(
+      _.coalesce(1).write.mode("overwrite").parquet(outDir.resolve(name).toString)))
     val oracle = SparkEntry.oracleSqlFor(spark, sfDir, Some(QuerySet.toSet))
     Files.write(outDir.resolve("oracle_sql.json"), oracle.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }.mkString("{", ",", "}")
       .getBytes(StandardCharsets.UTF_8))
     SessionMemo.evictAll(spark)
-    val setup = Clock.sinceJvmStart()
 
-    final case class Pass(wallS: Double, cpuS: Double, perQuery: Map[String, Double],
-        tasks: Long, shuffle: Long, spill: Long)
-    val passes = mutable.ArrayBuffer.empty[Pass]
+    // set-up of a lake session: a new session over the shared context,
+    // with the graft functions and the fixture tables as views
+    val setups = (1 to sz.setups).map { i =>
+      Trace.span("lake.setup", i)(Setup.time(GraftFunctions.attach(spark.newSession(), sfDir)))
+    }
+
+    val perQuery = mutable.ArrayBuffer.empty[Map[String, Double]]
     val m0 = Clock.nanos()
-    while (passes.size < sz.maxPasses &&
-        (passes.size < sz.minPasses || Clock.nanos() - m0 < ctx.seconds * 1e9)) {
-      val p = passes.size + 1
-      counter.reset()
-      val c0 = Clock.cpuNanos()
-      val w0 = Clock.nanos()
-      val per = Trace.span("lake.pass", p) {
+    while (perQuery.size < sz.maxPasses &&
+        (perQuery.size < sz.minPasses || Clock.nanos() - m0 < ctx.seconds * 1e9)) {
+      val p = perQuery.size + 1
+      perQuery += ctx.meter("lake.pass", p) {
         order().map { name =>
           val t0 = Clock.nanos()
-          try Trace.span(s"queries.$name", p) {
-            declared(name).fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          } catch { case e: Exception =>
-            System.err.println(s"[perfbench] $name failed: ${e.getMessage}")
-            failedQueries += name
-          }
+          runQuery(spark, name, p)(_.write.format("noop").mode("overwrite").save())
           name -> (Clock.nanos() - t0) / 1e9
         }.toMap
       }
-      val wall = (Clock.nanos() - w0) / 1e9
-      val cpu = (Clock.cpuNanos() - c0) / 1e9
-      passes += Pass(wall, cpu, per, counter.tasks, counter.shuffleBytes, counter.spillBytes)
       SessionMemo.evictAll(spark)
     }
-    spark.sparkContext.removeSparkListener(counter)
-    // wall time per pass spread 0.35 (quartile distance / median) over
-    // ten runs on a shared 4-cpu host, beyond any useful bound: context only
-    ctx.note(f"lake_queries: median pass wall time ${Stats.median(passes.map(_.wallS).toSeq)}%.3f s")
-    ctx.note(s"lake_queries: ${passes.size} timed passes of ${QuerySet.size} queries on $sfDir " +
+    ctx.note(s"lake_queries: ${perQuery.size} timed passes of ${QuerySet.size} queries on $sfDir " +
       s"after one untimed output pass; outputs in $outDir")
-    val layers =
-      if (!ctx.trace) Map.empty[String, Double]
-      else QuerySet.map(n => s"queries.${n}_s" -> Stats.median(passes.map(_.perQuery(n)).toSeq)).toMap ++ Map(
-        "queries.tasks_per_pass" -> Stats.median(passes.map(_.tasks.toDouble).toSeq),
-        "queries.shuffle_bytes_per_pass" -> Stats.median(passes.map(_.shuffle.toDouble).toSeq),
-        "queries.spill_bytes_per_pass" -> Stats.median(passes.map(_.spill.toDouble).toSeq))
     // a query that fails fails in every pass: count each of its runs
-    val rounds = passes.size + 1
+    val rounds = perQuery.size + 1
     Result(
       correct = true,
       attempted = QuerySet.size * rounds, failed = failedQueries.size * rounds,
-      metrics = Map(
-        "setup_s" -> setup,
-        "cpu_s_per_pass" -> Stats.median(passes.map(_.cpuS).toSeq)),
-      layers = layers,
+      setups = setups,
+      detail = QuerySet.map(n => s"queries.${n}_s" -> Stats.median(perQuery.map(_(n)).toSeq)).toMap,
       failedNames = failedQueries.toSeq.sorted)
   }
 }

@@ -6,7 +6,9 @@ import java.nio.file.{Files, Path}
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.perfbench.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
 
 /** Clocks and counters the benchmark reads around its calls into the
   * program. Nothing here touches program code.
@@ -26,9 +28,46 @@ object Clock {
       .map(_.getCollectionTime.max(0L)).sum
   }
 
+  /** Steal and total jiffies of all the host's cpus (`/proc/stat`);
+    * zeros where that file cannot be read.
+    */
+  def stealJiffies(): (Long, Long) =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      val v = try src.getLines().next().trim.split("\\s+").drop(1).take(8).map(_.toLong)
+      finally src.close()
+      (v(7), v.sum)
+    } catch { case _: Exception => (0L, 0L) }
+
+  /** The share of the interval since `from` that the host's cpus lost to
+    * steal (time the VM's vCPUs were runnable but not run).
+    */
+  def stealShare(from: (Long, Long)): Double = {
+    val (s, t) = stealJiffies()
+    if (t > from._2) (s - from._1).toDouble / (t - from._2) else 0.0
+  }
+
   /** Seconds since this JVM started. */
   def sinceJvmStart(): Double =
     (System.currentTimeMillis() - ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
+}
+
+/** The JVM's CPU seconds and wall seconds of one set-up, and the host's
+  * steal share over it; `netCpuS` is the CPU time net of steal (see
+  * `Meter`).
+  */
+final case class Setup(cpuS: Double, wallS: Double, steal: Double) {
+  def netCpuS: Double = cpuS * (1 - steal)
+}
+
+object Setup {
+  def time(body: => Unit): Setup = {
+    val s0 = Clock.stealJiffies()
+    val c0 = Clock.cpuNanos()
+    val t0 = Clock.nanos()
+    body
+    Setup((Clock.cpuNanos() - c0) / 1e9, (Clock.nanos() - t0) / 1e9, Clock.stealShare(s0))
+  }
 }
 
 object Stats {
@@ -94,21 +133,93 @@ object Trace {
   }
 }
 
-/** Task-level counts of the batch engine, summed between `reset` calls. */
-class TaskCounter extends SparkListener {
-  @volatile var tasks = 0L
-  @volatile var shuffleBytes = 0L
-  @volatile var spillBytes = 0L
+/** Job and task counts of the batch engine, summed as the listener bus
+  * delivers them. Slots in the order of `Meter.EngineNames`.
+  */
+final class EngineCounter extends SparkListener {
+  private val c = new Array[Long](6)
 
-  def reset(): Unit = synchronized { tasks = 0; shuffleBytes = 0; spillBytes = 0 }
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized { c(0) += 1 }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-    tasks += 1
+    c(1) += 1
     Option(e.taskMetrics).foreach { m =>
-      shuffleBytes += m.shuffleWriteMetrics.bytesWritten
-      spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
+      c(2) += m.executorCpuTime
+      c(3) += m.inputMetrics.recordsRead
+      c(4) += m.outputMetrics.bytesWritten
+      c(5) += m.shuffleWriteMetrics.bytesWritten
     }
   }
+
+  def snapshot(): Vector[Long] = synchronized(c.toVector)
+}
+
+/** The timed operations of a run (a live batch, a backlog drain or a
+  * lake pass), with the JVM's CPU time and the engine's counts for each.
+  * Every workload reports the same metrics from it, each a median over
+  * the run's operations.
+  *
+  * CPU times are taken net of the host's steal: on the shared VMs this
+  * benchmark was built on, the JVM's CPU clock kept running while the
+  * host held its vCPUs, so the same drain read 5.6 s of CPU at 1 % steal
+  * and 7.8 s at 25 %, about 1 / (1 - steal) as much. Each operation's CPU
+  * time is scaled by (1 - the steal share of the host's cpus during it).
+  */
+final class Meter(spark: SparkSession) {
+  final case class Op(wallMs: Double, rawCpuMs: Double, steal: Double, engine: Vector[Long]) {
+    def cpuMs: Double = rawCpuMs * (1 - steal)
+    def taskCpuMs: Double = engine(2) / 1e6 * (1 - steal)
+  }
+
+  private val counter = new EngineCounter
+  spark.sparkContext.addSparkListener(counter)
+  val ops = mutable.ArrayBuffer.empty[Op]
+
+  /** Runs one timed operation. The listener bus is drained before and
+    * after it, outside the timed window, so the operation's tasks and
+    * only those are counted with it.
+    */
+  def apply[T](name: String, id: Long)(body: => T): T = {
+    ListenerBus.drain(spark.sparkContext)
+    val e0 = counter.snapshot()
+    val s0 = Clock.stealJiffies()
+    val c0 = Clock.cpuNanos()
+    val t0 = Clock.nanos()
+    val r = Trace.span(name, id)(body)
+    val t1 = Clock.nanos()
+    val c1 = Clock.cpuNanos()
+    val steal = Clock.stealShare(s0)
+    ListenerBus.drain(spark.sparkContext)
+    ops += Op((t1 - t0) / 1e6, (c1 - c0) / 1e6, steal,
+      counter.snapshot().zip(e0).map { case (a, b) => a - b })
+    r
+  }
+
+  def close(): Unit = spark.sparkContext.removeSparkListener(counter)
+
+  private def med(f: Op => Double): Double = Stats.median(ops.map(f).toSeq)
+
+  def wallMs: Double = med(_.wallMs)
+  def rawCpuMs: Double = med(_.rawCpuMs)
+  def steal: Double = med(_.steal)
+
+  /** End-to-end: the JVM's CPU time (all threads) per operation, net of
+    * steal.
+    */
+  def metrics: Map[String, Double] = Map("cpu_ms_per_op" -> med(_.cpuMs))
+
+  /** Per layer: the Spark tasks (executor side) against everything else
+    * in the JVM (the driver: planning, source listing, offset and commit
+    * logs, sink commits, plus GC and JIT), and the engine's counts.
+    */
+  def layers: Map[String, Double] = Map(
+    "driver.cpu_ms_per_op" -> med(o => o.cpuMs - o.taskCpuMs),
+    "tasks.cpu_ms_per_op" -> med(_.taskCpuMs),
+    "jobs.per_op" -> med(_.engine(0).toDouble),
+    "tasks.per_op" -> med(_.engine(1).toDouble),
+    "tasks.input_records_per_op" -> med(_.engine(3).toDouble),
+    "tasks.output_bytes_per_op" -> med(_.engine(4).toDouble),
+    "tasks.shuffle_bytes_per_op" -> med(_.engine(5).toDouble))
 }
 
 object Json {

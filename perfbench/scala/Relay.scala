@@ -152,68 +152,91 @@ object Relay {
       "streaming.sink_write_ms_per_100k" -> Stats.median(sinkMs) * 1e5 / math.max(1L, rows))
   }
 
-  final case class Sizes(batchEvents: Int, warmBatches: Int, minBatches: Int,
-      maxBatches: Int, backlogEvents: Int, backlogFiles: Int, segmentEvents: Int,
-      minDrains: Int, maxDrains: Int, layerSample: Int, layerReps: Int)
+  final case class Sizes(setups: Int, setupEvents: Int, batchEvents: Int,
+      warmBatches: Int, minBatches: Int, maxBatches: Int, backlogEvents: Int,
+      backlogFiles: Int, segmentEvents: Int, minDrains: Int, maxDrains: Int,
+      layerSample: Int, layerReps: Int)
 
-  val Full = Sizes(batchEvents = 500, warmBatches = 5, minBatches = 20, maxBatches = 400,
-    backlogEvents = 45000, backlogFiles = 3, segmentEvents = 750,
-    minDrains = 3, maxDrains = 20, layerSample = 100000, layerReps = 5)
-  val Smoke = Sizes(batchEvents = 60, warmBatches = 2, minBatches = 4, maxBatches = 4,
-    backlogEvents = 3000, backlogFiles = 2, segmentEvents = 250,
-    minDrains = 1, maxDrains = 1, layerSample = 2000, layerReps = 1)
+  val Full = Sizes(setups = 5, setupEvents = 500, batchEvents = 500, warmBatches = 3,
+    minBatches = 15, maxBatches = 400, backlogEvents = 45000, backlogFiles = 3,
+    segmentEvents = 750, minDrains = 3, maxDrains = 20, layerSample = 100000, layerReps = 5)
+  val Smoke = Sizes(setups = 2, setupEvents = 60, batchEvents = 60, warmBatches = 1,
+    minBatches = 4, maxBatches = 4, backlogEvents = 3000, backlogFiles = 2,
+    segmentEvents = 250, minDrains = 2, maxDrains = 2, layerSample = 2000, layerReps = 1)
+
+  /** The relay's set-up, `sz.setups` times: a fresh query, with a fresh
+    * checkpoint and sink, over a source directory that holds one file of
+    * `sz.setupEvents` events, from `start` until that file's micro-batch
+    * is committed.
+    */
+  private def setups(ctx: Ctx, sz: Sizes, trigger: => Trigger): Seq[Setup] = {
+    val rng = new SplittableRandom(ctx.seed ^ 0x5e7face5L)
+    val profiles = new Gen.Profiles(rng)
+    (1 to sz.setups).map { i =>
+      val d = ctx.work.resolve(s"setup$i")
+      val src = d.resolve("src")
+      Files.createDirectories(src)
+      val w = Gen.writer(src.resolve("part-000.json"))
+      try Gen.writeEvents(w, new Gen.Segment(rng.split(), profiles.next(), i.toLong * sz.setupEvents,
+        1600000000L + i * 60), sz.setupEvents)
+      finally w.close()
+      var q: StreamingQuery = null
+      val s = Trace.span("relay.setup", i) {
+        try Setup.time {
+          q = start(ctx.spark, src, d.resolve("out"), d.resolve("chk"), trigger)
+          q.processAllAvailable()
+        } finally if (q != null) q.stop()
+      }
+      Main.deleteTree(d)
+      s
+    }
+  }
+
+  /** Streaming-layer figures of a traced run, for its trace file and
+    * context lines.
+    */
+  private def detail(ctx: Ctx, sz: Sizes, progress: Seq[StreamingQueryProgress], src: Path,
+      dir: Path, extra: Map[String, Double]): Map[String, Double] =
+    if (!ctx.trace) Map.empty
+    else phaseMetrics(progress) ++ layerCalls(ctx.spark, src, dir.resolve("layer"),
+      sz.layerSample, sz.layerReps) ++ extra
 
   def live(ctx: Ctx, sz: Sizes): Result = {
     val spark = ctx.spark
+    val setupRuns = setups(ctx, sz, Trigger.ProcessingTime(0))
     val dir = ctx.work.resolve("live")
     val (stage, src, out, chk) =
       (dir.resolve("stage"), dir.resolve("src"), dir.resolve("out"), dir.resolve("chk"))
     Files.createDirectories(src)
     val rng = new SplittableRandom(ctx.seed)
     val profiles = new Gen.Profiles(rng)
-    var genNs = 0L
     val expected = mutable.ArrayBuffer.empty[Gen.Fp]
     /** Stages batch i (untimed) and returns its file. */
     def stageBatch(i: Int): Path = {
-      val t0 = Clock.nanos()
       val f = stage.resolve(f"batch-$i%05d.json")
       val seg = new Gen.Segment(rng, profiles.next(), i.toLong * sz.batchEvents, 1700000000L + i * 60)
       val w = Gen.writer(f)
       try expected += Gen.writeEvents(w, seg, sz.batchEvents) finally w.close()
-      genNs += Clock.nanos() - t0
       f
     }
-    val lat = mutable.ArrayBuffer.empty[Double]
-    val cpuUs = mutable.ArrayBuffer.empty[Double]
     /** One closed-loop operation: the batch file appears in the source
       * directory, and the call returns once its micro-batch is committed.
       */
-    def runBatch(q: StreamingQuery, i: Int, timed: Boolean): Unit = {
-      val f = stageBatch(i)
-      val c0 = Clock.cpuNanos()
-      val t0 = Clock.nanos()
-      Files.move(f, src.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE)
-      Trace.span("relay.batch", i)(q.processAllAvailable())
-      val t1 = Clock.nanos()
-      if (timed) {
-        lat += (t1 - t0) / 1e6
-        cpuUs += (Clock.cpuNanos() - c0) / 1e3 / sz.batchEvents
-      }
-    }
+    def move(f: Path): Unit = Files.move(f, src.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE)
     val q = Trace.span("streaming.start", 0)(start(spark, src, out, chk, Trigger.ProcessingTime(0)))
     try {
-      (0 until sz.warmBatches).foreach(i => runBatch(q, i, timed = false))
-      val setup = Clock.sinceJvmStart() - genNs / 1e9
+      (0 until sz.warmBatches).foreach { i => move(stageBatch(i)); q.processAllAvailable() }
       val t0 = Clock.nanos()
       var i = sz.warmBatches
-      while (i < sz.warmBatches + sz.maxBatches &&
-          (lat.size < sz.minBatches || Clock.nanos() - t0 < ctx.seconds * 1e9)) {
-        runBatch(q, i, timed = true)
+      while (i < sz.warmBatches + sz.maxBatches && (i - sz.warmBatches < sz.minBatches ||
+          Clock.nanos() - t0 < ctx.seconds * 1e9)) {
+        val f = stageBatch(i)
+        ctx.meter("relay.batch", i) { move(f); q.processAllAvailable() }
         i += 1
       }
       q.stop()
+      val timed = i - sz.warmBatches
       val progress = nonEmpty(q)
-      val timedProgress = progress.drop(sz.warmBatches)
       // every operation must be exactly one micro-batch: batch k read
       // file k, which the per-batch sink fingerprints below confirm
       val oneFileEach = progress.size == i
@@ -224,30 +247,20 @@ object Relay {
       if (!oneFileEach || unknown.nonEmpty)
         ctx.note(s"relay_live: batches do not map one to one onto files: ${progress.size} " +
           s"non-empty batches for $i files, sink batch ids without a file ${unknown.mkString(",")}")
-      val events = lat.size.toLong * sz.batchEvents
-      ctx.note(s"relay_live: ${lat.size} timed batches of ${sz.batchEvents} events, " +
+      ctx.note(s"relay_live: $timed timed batches of ${sz.batchEvents} events after " +
         s"${sz.warmBatches} warm-up batches, one source file per batch")
-      // wall-clock figures follow the host's steal (on a shared 4-vCPU VM
-      // the median batch latency of a set of runs moved from 607 to 862 ms
-      // with it), beyond any bound a regression check can use: context only
-      ctx.note(f"relay_live: batch latency p50 ${Stats.median(lat.toSeq)}%.1f ms, " +
-        f"${events / (lat.sum / 1e3)}%.1f events/s over the timed batches")
-      val layers =
-        if (!ctx.trace) Map.empty[String, Double]
-        else phaseMetrics(timedProgress) ++ layerCalls(spark, src, dir.resolve("layer"),
-          sz.layerSample, sz.layerReps) ++ Map(
-          "streaming.batches_per_drain" -> progress.size.toDouble / i,
-          "streaming.sink_files_per_batch" -> parquetFiles(out).size.toDouble / progress.size,
-          "cdc.relayed_share" -> got.values.map(_._1.rows).sum.toDouble / (i.toLong * sz.batchEvents))
+      // wall-clock figures follow the host's steal beyond any bound a
+      // regression check can use: context only
+      val lat = ctx.meter.ops.map(_.wallMs).toSeq
+      ctx.note(f"relay_live: batch latency p50 ${Stats.median(lat)}%.1f ms, " +
+        f"${timed.toLong * sz.batchEvents / (lat.sum / 1e3)}%.1f events/s over the timed batches")
       Result(
         correct = oneFileEach && unknown.isEmpty,
-        attempted = i, failed = failedOps,
-        metrics = Map(
-          "setup_s" -> setup,
-          // a median: a batch that catches a GC pause or a burst of
-          // compilation does not move it
-          "cpu_us_per_event" -> Stats.median(cpuUs.toSeq)),
-        layers = layers)
+        attempted = i, failed = failedOps, setups = setupRuns,
+        detail = detail(ctx, sz, progress.drop(sz.warmBatches), src, dir, Map(
+          "streaming.batches_per_op" -> progress.size.toDouble / i,
+          "streaming.sink_files_per_batch" -> parquetFiles(out).size.toDouble / progress.size,
+          "cdc.relayed_share" -> got.values.map(_._1.rows).sum.toDouble / (i.toLong * sz.batchEvents))))
     } finally if (q.isActive) q.stop()
   }
 
@@ -281,69 +294,52 @@ object Relay {
       }
       rendered.map(_._2).reduce(_ + _)
     }
-    val t0 = Clock.nanos()
     val src = dir.resolve("src")
     Files.createDirectories(src)
     val events = sz.backlogEvents / sz.backlogFiles * sz.backlogFiles
     val expected = Trace.span("gen.backlog", 0)(writeBacklog(src, events, sz.backlogFiles))
-    val genS = (Clock.nanos() - t0) / 1e9
+    val setupRuns = setups(ctx, sz, Trigger.AvailableNow())
 
-    final case class Drain(wallS: Double, cpuS: Double, rawFp: Seq[Long], rows: Long,
-        ok: Boolean, progress: Seq[StreamingQueryProgress], files: Int, bytes: Long)
-    /** One drain on a fresh sink and checkpoint. The first timed drain's
+    final case class Drain(rawFp: Seq[Long], ok: Boolean,
+        progress: Seq[StreamingQueryProgress], files: Int)
+    /** One timed drain on a fresh sink and checkpoint. The first drain's
       * rows are checked one by one against the generator's expectation;
       * every later drain must then write the same multiset of raw rows.
       */
-    def drain(from: Path, d: Int, reference: Option[Drain]): Drain = {
+    def drain(d: Int, reference: Option[Drain]): Drain = {
       val (out, chk) = (dir.resolve(s"out$d"), dir.resolve(s"chk$d"))
-      val c0 = Clock.cpuNanos()
-      val w0 = Clock.nanos()
-      val q = Trace.span("relay.drain", d) {
-        val q = start(spark, from, out, chk, Trigger.AvailableNow())
+      val q = ctx.meter("relay.drain", d) {
+        val q = start(spark, src, out, chk, Trigger.AvailableNow())
         q.awaitTermination()
         q
       }
-      val wall = (Clock.nanos() - w0) / 1e9
-      val cpu = (Clock.cpuNanos() - c0) / 1e9
-      val raw = if (d == 0) Nil else Trace.span("check.raw", d)(rawFingerprint(spark, out))
-      val ok = d > 0 && (reference match {
+      val raw = Trace.span("check.raw", d)(rawFingerprint(spark, out))
+      val ok = reference match {
         case Some(r) => r.ok && raw == r.rawFp
         case None =>
           val got = Trace.span("check.sink", d)(sinkFingerprints(spark, out)).values
           got.map(_._2).sum == 0 && got.map(_._1).foldLeft(Gen.Fp.zero)(_ + _) == expected
-      })
-      val files = parquetFiles(out)
-      val r = Drain(wall, cpu, raw, raw.headOption.getOrElse(0L), ok, nonEmpty(q), files.size, files.map(Files.size).sum)
+      }
+      val r = Drain(raw, ok, nonEmpty(q), parquetFiles(out).size)
       Main.deleteTree(out); Main.deleteTree(chk)
       r
     }
-    drain(src, 0, None) // warm-up: the same backlog, unchecked and untimed
-    val setup = Clock.sinceJvmStart() - genS
     val drains = mutable.ArrayBuffer.empty[Drain]
     val m0 = Clock.nanos()
     while (drains.size < sz.maxDrains &&
         (drains.size < sz.minDrains || Clock.nanos() - m0 < ctx.seconds * 1e9))
-      drains += drain(src, drains.size + 1, drains.headOption)
+      drains += drain(drains.size + 1, drains.headOption)
     ctx.note(s"relay_backlog: ${drains.size} drains of $events events in ${sz.backlogFiles} files " +
       s"(${sz.segmentEvents}-event segments), fresh sink and checkpoint per drain")
     // wall-clock, so context only, as on relay_live
-    ctx.note(f"relay_backlog: ${Stats.median(drains.map(events / _.wallS).toSeq)}%.0f events/s, " +
-      "median over drains")
+    ctx.note(f"relay_backlog: ${events / (ctx.meter.wallMs / 1e3)}%.0f events/s, median over drains")
     val progress = drains.flatMap(_.progress).toSeq
-    val layers =
-      if (!ctx.trace) Map.empty[String, Double]
-      else phaseMetrics(progress) ++ layerCalls(spark, src, dir.resolve("layer"),
-        sz.layerSample, sz.layerReps) ++ Map(
-        "streaming.batches_per_drain" -> progress.size.toDouble / drains.size,
-        "streaming.sink_files_per_batch" -> drains.map(_.files).sum.toDouble / progress.size,
-        "cdc.relayed_share" -> Stats.median(drains.map(_.rows.toDouble / events).toSeq))
     Result(
       correct = true,
-      attempted = drains.size, failed = drains.count(!_.ok),
-      metrics = Map(
-        "setup_s" -> setup,
-        "cpu_us_per_event" -> Stats.median(drains.map(_.cpuS * 1e6 / events).toSeq),
-        "sink_bytes_per_event" -> Stats.median(drains.map(_.bytes.toDouble / events).toSeq)),
-      layers = layers)
+      attempted = drains.size, failed = drains.count(!_.ok), setups = setupRuns,
+      detail = detail(ctx, sz, progress, src, dir, Map(
+        "streaming.batches_per_op" -> progress.size.toDouble / drains.size,
+        "streaming.sink_files_per_batch" -> drains.map(_.files).sum.toDouble / progress.size,
+        "cdc.relayed_share" -> Stats.median(drains.map(_.rawFp.head.toDouble / events).toSeq))))
   }
 }
