@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{ChangeStreamRelay, LatestStateProcessor}
+import graft.streaming.{ChangeStreamRelay, StatefulOps}
 
 /** Relay throughput bench — the reference's native metric (it is a CDC
   * relay; the comparable number is events/second through the full
@@ -101,7 +101,7 @@ object RelayBench {
     spark.conf.unset("spark.sql.files.maxPartitionBytes")
     spark.conf.unset("spark.sql.files.minPartitionNum")
 
-    // STATEFUL leg: the same source through the transformWithState
+    // STATEFUL leg: the same source through the flatMapGroupsWithState
     // latest-state materialization (one shuffle on documentKey, RocksDB
     // state store — the spill-to-disk provider a 100 TB keyset needs),
     // checkpointed parquet sink per epoch. This measures the stateful
@@ -112,7 +112,7 @@ object RelayBench {
     val outS = Files.createTempDirectory("relaybench_state_out").toString
     val chkS = Files.createTempDirectory("relaybench_state_chk").toString
     val t1 = System.nanoTime()
-    val qs = LatestStateProcessor
+    val qs = StatefulOps
       .latestState(ChangeStreamRelay.readChangeStream(spark, src)).toDF()
       .writeStream.outputMode("update")
       .option("checkpointLocation", chkS)

@@ -27,8 +27,8 @@ import graft.cdc.ChangeEvents
   *
   * Scale: every relay transform is narrow — no shuffle, no state — so
   * throughput scales linearly with source partitions. Stateful extras
-  * (dedupByKey, latestState) shuffle once on the key and bound their state
-  * with watermarks.
+  * shuffle once on the key: [[dedupWithinWatermark]] bounds its state with
+  * a watermark, [[StatefulOps.latestState]] with a processing-time TTL.
   */
 object ChangeStreamRelay {
 

@@ -31,9 +31,17 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
   * ONLY for users with a tombstone — the store grows with the deletion-
   * request count, not the user base or the stream length. No TTL:
   * forget-state must outlive any retention horizon by definition.
+  *
+  * One processor serves every event shape: `seq` and `tombstone` read an
+  * event, `out` builds its output row from the event and its verdict
+  * (`admitted`, always false for a tombstone). [[ForgetFilter.guard]] and
+  * [[GovernancePipeline.run]] pass their own case classes; the state (the
+  * Boolean "forgotten" per `Long` user key) is the same for both, and
+  * existing checkpoints depend on that name and encoding.
   */
-class ForgetProcessor
-    extends StatefulProcessor[Long, ForgetFilter.Ev, ForgetFilter.Out] {
+class ForgetProcessor[E, O](seq: E => Long, tombstone: E => Boolean,
+    out: (E, Boolean) => O)
+    extends StatefulProcessor[Long, E, O] {
 
   @transient private var forgotten: ValueState[Boolean] = _
 
@@ -43,17 +51,17 @@ class ForgetProcessor
 
   override def handleInputRows(
       key: Long,
-      rows: Iterator[ForgetFilter.Ev],
-      timerValues: TimerValues): Iterator[ForgetFilter.Out] = {
-    val ordered = rows.toSeq.sortBy(e => (e.seq, !e.tombstone))
+      rows: Iterator[E],
+      timerValues: TimerValues): Iterator[O] = {
+    val ordered = rows.toSeq.sortBy(e => (seq(e), !tombstone(e)))
     var gone = forgotten.exists()
     ordered.iterator.map { e =>
-      if (e.tombstone) {
+      if (tombstone(e)) {
         if (!gone) forgotten.update(true)
         gone = true
-        ForgetFilter.Out(e.user_id, e.seq, tombstone = true, admitted = false)
+        out(e, false)
       } else {
-        ForgetFilter.Out(e.user_id, e.seq, tombstone = false, admitted = !gone)
+        out(e, !gone)
       }
     }
   }
@@ -69,8 +77,10 @@ object ForgetFilter {
   def guard(events: Dataset[Ev]): Dataset[Out] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
-      .transformWithState(new ForgetProcessor, TimeMode.None(),
-        OutputMode.Append())
+      .transformWithState(
+        new ForgetProcessor[Ev, Out](_.seq, _.tombstone,
+          (e, admitted) => Out(e.user_id, e.seq, e.tombstone, admitted)),
+        TimeMode.None(), OutputMode.Append())
   }
 
   /** Ledger routing: (admitted data, purge ledger — suppressed data and

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** The governance surface as ONE composed streaming path — the way a
   * live deployment actually runs it, mirroring how [[IngestPipeline]]
@@ -28,12 +27,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
   * open (window, key); the monitor ten longs per open window — all
   * bounded, none proportional to stream length.
   *
-  * The guard logic is [[ForgetProcessor]]'s, step for step (batch rows
-  * ordered by (seq, tombstones-first), monotone suppression, no TTL) —
-  * duplicated only in the EVENT TYPE, which here carries the payload
-  * columns (ts, key, n_chars) the downstream stages consume;
-  * GovernancePipelineSpec pins verdict parity against ForgetFilter on
-  * a shared replay so the two processors cannot drift.
+  * The guard is [[ForgetProcessor]] itself, run over [[Ev]] so the
+  * payload columns (ts, key, n_chars) the downstream stages consume pass
+  * through with each verdict.
   */
 object GovernancePipeline {
 
@@ -46,37 +42,6 @@ object GovernancePipeline {
   /** [[Ev]] plus the guard's verdict. */
   case class Guarded(user_id: Long, seq: Long, tombstone: Boolean,
       ts: java.sql.Timestamp, key: String, n_chars: Long, admitted: Boolean)
-
-  /** [[ForgetProcessor]] with payload passthrough — same state (one
-    * boolean, only for tombstoned users), same in-batch determinism,
-    * same monotone suppression.
-    */
-  class GuardProcessor extends StatefulProcessor[Long, Ev, Guarded] {
-    @transient private var forgotten: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      forgotten = getHandle.getValueState[Boolean]("forgotten",
-        Encoders.scalaBoolean, TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: Long,
-        rows: Iterator[Ev],
-        timerValues: TimerValues): Iterator[Guarded] = {
-      val ordered = rows.toSeq.sortBy(e => (e.seq, !e.tombstone))
-      var gone = forgotten.exists()
-      ordered.iterator.map { e =>
-        if (e.tombstone) {
-          if (!gone) forgotten.update(true)
-          gone = true
-          Guarded(e.user_id, e.seq, tombstone = true, e.ts, e.key,
-            e.n_chars, admitted = false)
-        } else {
-          Guarded(e.user_id, e.seq, tombstone = false, e.ts, e.key,
-            e.n_chars, admitted = !gone)
-        }
-      }
-    }
-  }
 
   /** The six output streams of one governed deployment. */
   case class Outputs(
@@ -95,7 +60,7 @@ object GovernancePipeline {
     * guarded lineage; Structured Streaming gives every started sink its
     * own state store, so all six replay the guard identically (the
     * guard is deterministic per batch by construction). Each head gets
-    * its OWN [[GuardProcessor]] INSTANCE: the driver-side
+    * its OWN [[ForgetProcessor]] INSTANCE: the driver-side
     * StatefulProcessor handle is stored in the instance, so a single
     * instance shared across heads races concurrent query starts on
     * setHandle/init (observed as DUPLICATE_STATE_VARIABLE_DEFINED once
@@ -108,10 +73,13 @@ object GovernancePipeline {
       lDiversity: Int = DiversityGate.DefaultL,
       kAnon: Long = KAnonGate.DefaultK): Outputs = {
     import events.sparkSession.implicits._
-    // fresh processor instance PER HEAD (see the class doc's race note)
+    // fresh processor instance PER HEAD (see the race note above)
     def guarded(): DataFrame = events.groupByKey(_.user_id)
-      .transformWithState(new GuardProcessor, TimeMode.None(),
-        OutputMode.Append())
+      .transformWithState(
+        new ForgetProcessor[Ev, Guarded](_.seq, _.tombstone,
+          (e, admitted) => Guarded(e.user_id, e.seq, e.tombstone, e.ts,
+            e.key, e.n_chars, admitted)),
+        TimeMode.None(), OutputMode.Append())
       .toDF()
     def admittedOnly(): DataFrame = guarded().filter(col("admitted"))
     val admitted = admittedOnly()

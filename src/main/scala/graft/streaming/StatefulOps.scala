@@ -1,18 +1,24 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.cdc.ChangeEvents
 
 /** Stateful streaming operators over the change-event envelope: the
   * materialized "current state per document" view that the reference's
   * `FullDocument=UpdateLookup` post-images imply (main.go:92) but never
   * materialize.
   *
-  * State shape: one small record per live key, partitioned by key hash
-  * across executors; deletes remove state so the store tracks the live
-  * keyset, and a processing-time TTL bounds it for abandoned keys —
-  * the 100 TB discipline (SURVEY.md §7.4): never unbounded per-key state.
+  * State shape: one small record per key, partitioned by key hash
+  * across executors. [[latestState]] keeps a delete as a tombstone (so a
+  * replayed older event cannot resurrect the key) and [[scd2History]]
+  * clears state on delete; an optional processing-time TTL reclaims
+  * abandoned keys and tombstones. With `ttl = None` tombstones are never
+  * reclaimed, so the store grows with every key ever seen — use it only
+  * for known-bounded keysets (SURVEY.md §7.4: never unbounded per-key
+  * state at scale).
   */
 object StatefulOps {
 
@@ -37,26 +43,58 @@ object StatefulOps {
     get_json_object(clusterTime, "$['$timestamp']['t']").cast("long") * 1000,
     unix_millis(try_to_timestamp(clusterTime)))
 
-  /** The envelope projected to [[KeyedChange]] columns; rows whose
-    * `clusterTime` defeats every [[eventTimeMillis]] form are split out by
-    * the `valid` flag (dead-letter them — a null in the non-nullable
-    * `eventTimeMs` would otherwise fail at encode time).
+  /** The document ops of the envelope ([[ChangeEvents.DocumentOps]] with a
+    * non-null `documentKey`) projected to [[KeyedChange]] columns.
+    * Collection-level events (invalidate, drop, …) carry no document and
+    * are the relay's dead letters, not state changes. Rows whose
+    * `clusterTime` defeats every [[eventTimeMillis]] form keep a NULL
+    * `eventTimeMs` (dead-letter them — a null in the non-nullable field
+    * would otherwise fail at encode time).
     */
-  private[streaming] def keyedChanges(envelope: DataFrame): DataFrame =
-    envelope.select(
-      col("documentKey"),
-      col("operationType"),
-      col("fullDocument"),
-      eventTimeMillis(col("clusterTime")).as("eventTimeMs"))
+  private def keyedChanges(envelope: DataFrame): DataFrame =
+    envelope
+      .filter(col("operationType").isin(ChangeEvents.DocumentOps: _*) &&
+        col("documentKey").isNotNull)
+      .select(
+        col("documentKey"),
+        col("operationType"),
+        col("fullDocument"),
+        eventTimeMillis(col("clusterTime")).as("eventTimeMs"))
 
-  private def updateState(ttl: Option[String])(
+  /** The wiring both folds share: the foldable [[keyedChanges]] grouped
+    * by `documentKey`, each key's micro-batch handed to `fold` in
+    * (eventTimeMs, operationType) order — a total order, so replayed
+    * deliveries fold idempotently. `ttl` (e.g. `Some("1 hour")`) arms a
+    * processing-time timeout on every key that still holds state; when it
+    * fires the state is dropped and nothing is emitted.
+    */
+  private def foldByKey[S: Encoder, U: Encoder](envelope: DataFrame,
+      mode: OutputMode, ttl: Option[String])(
+      fold: (String, Seq[KeyedChange], GroupState[S]) => Iterator[U]): Dataset[U] = {
+    import envelope.sparkSession.implicits._
+    val timeoutConf =
+      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    keyedChanges(envelope)
+      .filter(col("eventTimeMs").isNotNull)
+      .as[KeyedChange]
+      .groupByKey(_.documentKey)
+      .flatMapGroupsWithState(mode, timeoutConf) {
+        (key: String, changes: Iterator[KeyedChange], state: GroupState[S]) =>
+          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+          else {
+            val out = fold(key,
+              changes.toSeq.sortBy(c => (c.eventTimeMs, c.operationType)), state)
+            if (state.exists) ttl.foreach(state.setTimeoutDuration)
+            out
+          }
+      }
+  }
+
+  private def updateState(
       key: String,
-      changes: Iterator[KeyedChange],
+      ordered: Seq[KeyedChange],
       state: GroupState[CurrentState]): Iterator[CurrentState] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    // fold this micro-batch's changes in event-time order (total order via
-    // (ts, op) — replayed deliveries fold idempotently)
-    val ordered = changes.toSeq.sortBy(c => (c.eventTimeMs, c.operationType))
     var cur = state.getOption
     ordered.foreach { c =>
       if (cur.forall(_.lastEventTimeMs <= c.eventTimeMs)) {
@@ -72,7 +110,6 @@ object StatefulOps {
     }
     val st = cur.getOrElse(CurrentState(key, null, "delete", 0L))
     state.update(st)
-    ttl.foreach(state.setTimeoutDuration) // TTL bounds keyset + tombstones
     Iterator.single(st)
   }
 
@@ -80,9 +117,10 @@ object StatefulOps {
     * key touched by each micro-batch (update output mode).
     *
     * `ttl`: processing-time state TTL (e.g. `Some("1 hour")`) for
-    * abandoned keys. With a TTL the engine schedules extra micro-batches
-    * to fire timeouts, so pair it with a real trigger interval in
-    * production; `None` keeps state until an explicit delete.
+    * abandoned keys and tombstones. With a TTL the engine schedules extra
+    * micro-batches to fire timeouts, so pair it with a real trigger
+    * interval in production; `None` keeps every key's state, tombstones
+    * included, for the life of the checkpoint.
     *
     * Rows with an unparseable `clusterTime` are dropped here (they have
     * no position in the event-time fold); route them through
@@ -90,15 +128,7 @@ object StatefulOps {
     */
   def latestState(envelope: DataFrame, ttl: Option[String] = None): Dataset[CurrentState] = {
     import envelope.sparkSession.implicits._
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    keyedChanges(envelope)
-      .filter(col("eventTimeMs").isNotNull)
-      .as[KeyedChange]
-      .groupByKey(_.documentKey)
-      .flatMapGroupsWithState(
-        OutputMode.Update, timeoutConf)(updateState(ttl))
+    foldByKey[CurrentState, CurrentState](envelope, OutputMode.Update, ttl)(updateState)
   }
 
   /** The rows [[latestState]] cannot fold: `clusterTime` parsed to
@@ -122,12 +152,10 @@ object StatefulOps {
   case class OpenVersion(payload: String, validFromMs: Long,
       lastEventMs: Long)
 
-  private def scd2Fold(ttl: Option[String])(
+  private def scd2Fold(
       key: String,
-      changes: Iterator[KeyedChange],
+      ordered: Seq[KeyedChange],
       state: GroupState[OpenVersion]): Iterator[ClosedVersion] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val ordered = changes.toSeq.sortBy(c => (c.eventTimeMs, c.operationType))
     var open = state.getOption
     val closed = Seq.newBuilder[ClosedVersion]
     ordered.foreach { c =>
@@ -150,9 +178,7 @@ object StatefulOps {
       }
     }
     open match {
-      case Some(o) =>
-        state.update(o)
-        ttl.foreach(state.setTimeoutDuration)
+      case Some(o) => state.update(o)
       case None => if (state.exists) state.remove()
     }
     closed.result().iterator
@@ -163,20 +189,13 @@ object StatefulOps {
     * it (append mode — exactly-once per version under checkpointing);
     * duplicate-content changes collapse, deletes close and clear state.
     * State is ONE small record per live key (the open version), so the
-    * store tracks the live keyset like [[latestState]] — deletes shrink
-    * it and `ttl` reclaims abandoned keys. The closed rows are exactly
-    * the batch query's non-current rows, arriving as the stream does.
+    * store tracks the live keyset — deletes shrink it (no tombstone,
+    * unlike [[latestState]]) and `ttl` reclaims abandoned keys. The
+    * closed rows are exactly the batch query's non-current rows, arriving
+    * as the stream does.
     */
   def scd2History(envelope: DataFrame, ttl: Option[String] = None): Dataset[ClosedVersion] = {
     import envelope.sparkSession.implicits._
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    keyedChanges(envelope)
-      .filter(col("eventTimeMs").isNotNull)
-      .as[KeyedChange]
-      .groupByKey(_.documentKey)
-      .flatMapGroupsWithState(
-        OutputMode.Append, timeoutConf)(scd2Fold(ttl))
+    foldByKey[OpenVersion, ClosedVersion](envelope, OutputMode.Append, ttl)(scd2Fold)
   }
 }

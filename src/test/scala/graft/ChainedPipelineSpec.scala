@@ -35,13 +35,6 @@ class ChainedPipelineSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def withRocksDb[T](f: => T): T = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   private val T0 = 1700000000L
 
   private val evalText =

@@ -16,13 +16,6 @@ import graft.streaming.ForgetFilter.{Ev, Out}
   */
 class ForgetFilterSpec extends SparkSpec {
 
-  private def withRocksDb[T](f: => T): T = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   private def runBatches(name: String, batches: Seq[Seq[Ev]]): Seq[Out] =
     withRocksDb {
       import spark.implicits._

@@ -15,14 +15,6 @@ class IngestPipelineSpec extends SparkSpec {
 
   import spark.implicits._
 
-  /** transformWithState needs column families → RocksDB provider. */
-  private def withRocksDb[T](f: => T): T = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   private val evalText =
     "the quick brown fox jumps over the lazy dog and runs far away today"
   private lazy val standing =

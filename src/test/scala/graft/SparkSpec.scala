@@ -15,6 +15,16 @@ trait SparkSpec extends AnyFunSuite {
 
   lazy val sfDir = "/root/testdata/sf0.001"
 
+  /** Run `f` with the RocksDB state store provider (transformWithState
+    * needs its column families), restoring the default afterwards.
+    */
+  def withRocksDb[T](f: => T): T = {
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try f
+    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  }
+
   /** Every node of an EXECUTED plan, descending through the AQE wrappers
     * (`AdaptiveSparkPlanExec`, `QueryStageExec`) that plain
     * `collect`/`collectLeaves` treat as leaves.

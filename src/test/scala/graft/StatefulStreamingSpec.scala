@@ -137,17 +137,15 @@ class StatefulStreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(snap).getParent)
   }
 
-  test("transformWithState latest-state matches the flatMapGroupsWithState fold") {
+  test("latest-state folds insert/update/delete on the RocksDB state store") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val input = MemoryStream[String]
       val envelope = ChangeEvents.parseEnvelope(input.toDF(), "value")
-      val state = graft.streaming.LatestStateProcessor.latestState(envelope)
+      val state = StatefulOps.latestState(envelope)
 
-      val q = state.toDF().writeStream.format("memory").queryName("tws_out")
+      val q = state.toDF().writeStream.format("memory").queryName("rocks_out")
         .outputMode("update").start()
       input.addData(ev("insert", "k1", "v1", "2024-01-01T00:00:00Z"))
       q.processAllAvailable()
@@ -159,22 +157,20 @@ class StatefulStreamingSpec extends SparkSpec {
       q.processAllAvailable()
       q.stop()
 
-      val finalState = spark.table("tws_out")
+      val finalState = spark.table("rocks_out")
         .groupBy("documentKey")
         .agg(max(struct(col("lastEventTimeMs"), col("lastOp"), col("fullDocument"))).as("s"))
         .select(col("documentKey"), col("s.lastOp"), col("s.fullDocument"))
         .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
       assert(finalState("k1")._1 === "delete")
       assert(finalState("k2") === ("insert", "w1"))
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("streaming heavy hitters: bounded state, MG guarantee across epochs") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val k = 8
       val input = MemoryStream[graft.streaming.StreamingHeavyHitters.Item]
       val sketches =
@@ -204,7 +200,7 @@ class StatefulStreamingSpec extends SparkSpec {
       val bound = n / (k + 1)
       assert(items.contains("hot"))
       assert(items("hot") >= 60L - bound && items("hot") <= 60L, items)
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("streaming SCD2 emits each closed version once; dups collapse, deletes clear") {
@@ -241,6 +237,81 @@ class StatefulStreamingSpec extends SparkSpec {
     assert(rows.toSeq === Seq(
       ("k1", "v1", ms("2024-01-01T00:00:00Z"), ms("2024-01-01T01:00:00Z"), "update"),
       ("k1", "v2", ms("2024-01-01T01:00:00Z"), ms("2024-01-01T02:00:00Z"), "delete")))
+  }
+
+  /** A collection-level event: no `fullDocument`, and a `documentKey`
+    * only when `key` is given.
+    */
+  private def collEv(op: String, key: Option[String], ts: String): String =
+    s"""{"_id":"x","operationType":"$op","clusterTime":"$ts",""" +
+      s""""ns":{"db":"app","coll":"c"}""" +
+      key.fold("")(k => s""","documentKey":"$k"""") + "}"
+
+  test("invalidate and drop events never reach latest-state or SCD2 state") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val events = Seq(
+      ev("insert", "k1", "v1", "2024-01-01T00:00:00Z"),
+      collEv("invalidate", None, "2024-01-01T00:01:00Z"),
+      collEv("invalidate", Some("k1"), "2024-01-01T00:02:00Z"),
+      collEv("drop", None, "2024-01-01T00:03:00Z"))
+    // one micro-batch per event, every emitted row kept by the memory sink
+    def run(name: String, mode: String, lines: Seq[String])(
+        op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_])
+        : org.apache.spark.sql.DataFrame = {
+      val input = MemoryStream[String]
+      val q = op(ChangeEvents.parseEnvelope(input.toDF(), "value")).toDF()
+        .writeStream.format("memory").queryName(name).outputMode(mode).start()
+      lines.foreach { l => input.addData(l); q.processAllAvailable() }
+      q.stop()
+      spark.table(name)
+    }
+
+    val latest = run("coll_latest", "update", events)(StatefulOps.latestState(_))
+      .select("documentKey", "fullDocument", "lastOp")
+      .as[(String, String, String)].collect()
+    assert(latest.toSeq === Seq(("k1", "v1", "insert")))
+
+    // a later delete closes the insert's version — the only one SCD2 holds
+    val closed = run("coll_scd2", "append",
+        events :+ ev("delete", "k1", "", "2024-01-01T00:04:00Z"))(
+        StatefulOps.scd2History(_))
+      .select("documentKey", "payload", "validFromMs", "validToMs", "closedBy")
+      .as[(String, String, Long, Long, String)].collect()
+    def ms(s: String) = java.time.Instant.parse(s).toEpochMilli
+    assert(closed.toSeq === Seq(("k1", "v1", ms("2024-01-01T00:00:00Z"),
+      ms("2024-01-01T00:04:00Z"), "delete")))
+  }
+
+  test("latest-state TTL reclaims the tombstone of a key that goes quiet") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[String]
+    val envelope = ChangeEvents.parseEnvelope(input.toDF(), "value")
+    val q = StatefulOps.latestState(envelope, ttl = Some("1 second")).toDF()
+      .writeStream.format("memory").queryName("ttl_out")
+      .outputMode("update").start()
+    try {
+      input.addData(
+        ev("insert", "k1", "v1", "2024-01-01T00:00:00Z"),
+        ev("delete", "k1", "", "2024-01-01T00:01:00Z"))
+      // a processing-time timeout keeps the engine running empty
+      // micro-batches (processAllAvailable would never return), so poll
+      // the progress reports instead
+      def poll[T](what: String)(f: => Option[T]): T = {
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        var r = f
+        while (r.isEmpty && System.nanoTime() < deadline) { Thread.sleep(100); r = f }
+        assert(r.isDefined, what)
+        r.get
+      }
+      def stateRows(p: org.apache.spark.sql.streaming.StreamingQueryProgress) =
+        p.stateOperators.head.numRowsTotal
+      val dataBatch = poll("the data batch")(q.recentProgress.find(_.numInputRows > 0))
+      assert(stateRows(dataBatch) === 1L) // the tombstone
+      poll("a later batch with the tombstone dropped")(q.recentProgress.find(p =>
+        p.batchId > dataBatch.batchId && stateRows(p) == 0L))
+    } finally q.stop()
   }
 
   test("latest-state parses fixture-shaped ExtJSON clusterTime ($timestamp / $date)") {

@@ -14,13 +14,6 @@ import graft.streaming.StreamingDedup.{Doc, Verdict}
   */
 class StreamingDedupSpec extends SparkSpec {
 
-  private def withRocksDb[T](f: => T): T = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   private def runBatches(name: String,
       batches: Seq[Seq[Doc]]): Seq[Verdict] =
     withRocksDb {

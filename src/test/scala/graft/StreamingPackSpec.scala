@@ -16,9 +16,7 @@ class StreamingPackSpec extends SparkSpec {
   test("streaming pack ≡ batch doc_pack when replayed in order") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val docs = Tables.table(spark, sfDir, "documents")
         .select(col("source"),
           (col("doc_id") / 1000).cast("long").as("shard"),
@@ -57,6 +55,6 @@ class StreamingPackSpec extends SparkSpec {
           r.getLong(3), r.getLong(4))).sortBy(_._1)
       assert(streamed.length == batch.length)
       streamed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s != $b") }
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 }
