@@ -11,8 +11,8 @@ import graft.streaming.{ContaminationGuard, DriftMonitor, IngestPipeline,
   VectorServe}
 import graft.text.{QualityModel, TextFunctions}
 
-/** Throughput measurement for the round-10 streaming surface — the
-  * RelayBench discipline applied to the two new online paths:
+/** Throughput measurement for the round-10 streaming surface, on its
+  * two online paths:
   *
   *  1. '''Ingest''': documents/second through the FULL curation DAG
   *     ([[IngestPipeline]]: quality scoring → eval decontamination →
@@ -64,7 +64,7 @@ object IngestBench {
     val out = Files.createTempDirectory("ingestbench_out").toString
     val chk = Files.createTempDirectory("ingestbench_chk").toString
     // replicate the corpus with offset ids so PER-DOC work dominates the
-    // ~1 s fixed micro-batch floor (the RelayBench sweep lesson); the
+    // ~1 s fixed micro-batch floor (BASELINE.md's relay scale-out); the
     // replicas' identical text makes every copy beyond the first a
     // DUPLICATE — the re-crawl pattern, driving the dedup branch at
     // realistic volume

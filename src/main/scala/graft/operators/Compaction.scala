@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction — the operational complement of every
-  * streaming parquet sink in this engine (the relay's per-topic sink
+  * streaming parquet sink in this engine (the relay's parquet sink
   * and [[graft.streaming.MergeSink]] both emit one file batch per
   * epoch): periodically rewrite a directory of many small files into
   * few right-sized ones, so the 100 TB table a year of micro-batches

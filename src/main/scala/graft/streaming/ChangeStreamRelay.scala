@@ -17,7 +17,7 @@ import graft.cdc.ChangeEvents
   *   → parseEnvelope (PERMISSIVE, drop bad)    — R3 decode-skip, main.go:104-108
   *   → opFilter / deadLetter split             — §2.2 (reference panics)
   *   → relay: topic/key/value                  — R4-R8, main.go:111-142
-  *   → keyed sink, checkpointed                — R9 produce + R12 flush
+  *   → topic-sorted parquet sink, checkpointed — R9 produce + R12 flush
   *
   * Intentional improvements over the reference (SURVEY.md §7.5), all
   * checkpoint-based: resumable offsets (the reference loses events across
@@ -98,10 +98,12 @@ object ChangeStreamRelay {
         col("session_window.end").as("session_end"), col("topic"), col("n"))
 
   /** Kafka-shaped sink. Without the kafka-sql jar (this container), the
-    * `foreachBatch` writer persists each micro-batch as parquet
-    * partitioned by `topic` — same per-topic fan-out the Kafka sink's
-    * dynamic `topic` column gives (main.go:113,145-149); with the jar it
-    * is `.format("kafka")` with the identical (topic, key, value) frame.
+    * `foreachBatch` writer persists each micro-batch as parquet, one file
+    * per task: `topic` is a data column, like the Kafka sink's dynamic
+    * `topic` column (main.go:113,145-149), sorted within each file so
+    * row-group min/max statistics prune a filter on it. There are no
+    * `topic=` directories. With the jar it is `.format("kafka")` with the
+    * identical (topic, key, value) frame.
     *
     * Exactly-once: `foreachBatch` alone is at-least-once (a crash between
     * the write and the checkpoint commit replays the batch), so each epoch
@@ -117,11 +119,11 @@ object ChangeStreamRelay {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").partitionBy("topic")
+        batch.sortWithinPartitions("topic").write.mode("overwrite")
           .parquet(s"$outDir/batch=$batchId")
       }
 
-  /** End-to-end: source dir → relay → per-topic parquet. Returns the
+  /** End-to-end: source dir → relay → parquet sink. Returns the
     * started query; caller awaits termination.
     *
     * `oneShot = true` (default) drains what exists and stops

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -10,7 +13,7 @@ import graft.streaming.ChangeStreamRelay
 
 /** Streaming-semantics tests (SURVEY.md §5.4): the relay over micro-batched
   * change events — envelope parse, dead-letter routing, replay dedup,
-  * checkpointed per-topic sink.
+  * checkpointed parquet sink with idempotent replay.
   */
 class RelayStreamingSpec extends SparkSpec {
 
@@ -104,6 +107,70 @@ class RelayStreamingSpec extends SparkSpec {
     assert(second.filter(col("value").contains("\"_id\":\"4\"")).count() === 1)
   }
 
+  /** Every `.parquet` file under `dir`, at any depth. */
+  private def parquetFiles(dir: String): Seq[java.nio.file.Path] = {
+    val s = Files.walk(java.nio.file.Paths.get(dir))
+    try s.iterator.asScala.filter(_.toString.endsWith(".parquet")).toList
+    finally s.close()
+  }
+
+  // Relayed event ids (the envelope `_id`, read from `value`), sorted. A
+  // regex, not get_json_object: this spec's synthetic events carry an
+  // ISO-string clusterTime (the window tests to_timestamp it), which the
+  // raw splice renders unquoted — real fixtures carry $timestamp objects.
+  private def relayedIds(relayed: DataFrame): Seq[Int] =
+    relayed.select(regexp_extract(col("value"), "^\\{\"_id\":\"(\\d+)\"", 1))
+      .collect().map(_.getString(0).toInt).sorted.toSeq
+
+  test("sink writes one topic-sorted parquet file per task, no topic= directories") {
+    val src = Files.createTempDirectory("sink_src").toString
+    val out = Files.createTempDirectory("sink_out").toString
+    val chk = Files.createTempDirectory("sink_chk").toString
+    // one source file (one task) whose events interleave three topics
+    val colls = Seq("users", "orders", "items")
+    val events = (0 until 12).map(i => (i, colls(i % 3)))
+    Files.writeString(java.nio.file.Paths.get(s"$src/events.json"),
+      events.map { case (i, c) => ev(i, "insert", coll = c) }.mkString("\n"))
+    ChangeStreamRelay.run(spark, src, out, chk).awaitTermination()
+
+    val files = parquetFiles(s"$out/batch=0")
+    assert(files.length === 1, s"one file per task, got: ${files.mkString(", ")}")
+    val inFile = spark.read.parquet(files.head.toString)
+    assert(inFile.columns.contains("topic"), "topic is a column of the file itself")
+    val fileTopics = inFile.select("topic").collect().map(_.getString(0)).toSeq
+    assert(fileTopics === fileTopics.sorted, "rows are sorted by topic within the file")
+
+    for (c <- colls) {
+      val ids = relayedIds(spark.read.parquet(out).filter(col("topic") === s"app.$c"))
+      assert(ids === events.collect { case (i, `c`) => i }, s"rows of topic app.$c")
+    }
+  }
+
+  test("replay after a crash between sink write and commit log keeps each event once") {
+    val src = Files.createTempDirectory("replay_src").toString
+    val out = Files.createTempDirectory("replay_out").toString
+    val chk = Files.createTempDirectory("replay_chk").toString
+    for (f <- 0 until 3)
+      Files.writeString(java.nio.file.Paths.get(s"$src/f$f.json"),
+        (0 until 4).map(i => ev(f * 4 + i, "insert", coll = s"c$i")).mkString("\n"))
+    ChangeStreamRelay.run(spark, src, out, chk).awaitTermination()
+    assert(relayedIds(spark.read.parquet(out)) === (0 until 12))
+
+    // the sink wrote the last batch but its commit never landed: the
+    // restarted query must re-run that batch on the same offsets
+    val commits = new java.io.File(s"$chk/commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    Files.delete(java.nio.file.Paths.get(s"$chk/commits/$last"))
+    Files.deleteIfExists(java.nio.file.Paths.get(s"$chk/commits/.$last.crc"))
+    val replay = ChangeStreamRelay.run(spark, src, out, chk)
+    replay.awaitTermination()
+    assert(replay.recentProgress.exists(p => p.batchId == last && p.numInputRows > 0),
+      s"batch $last was not replayed")
+
+    assert(relayedIds(spark.read.parquet(out)) === (0 until 12),
+      "the replayed batch must overwrite its own output, not add to it")
+  }
+
   test("crash-resume: a query killed mid-source restarts with no loss and no dupes") {
     import org.apache.spark.sql.streaming.Trigger
     val src = Files.createTempDirectory("crash_src").toString
@@ -132,13 +199,7 @@ class RelayStreamingSpec extends SparkSpec {
 
     // a NEW query over the same checkpoint drains the rest
     ChangeStreamRelay.run(spark, src, out, chk).awaitTermination()
-    // regex, not get_json_object: this spec's synthetic events carry an
-    // ISO-string clusterTime (the window tests to_timestamp it), which the
-    // raw splice renders unquoted — real fixtures carry $timestamp objects
-    val ids = spark.read.parquet(out)
-      .select(regexp_extract(col("value"), "^\\{\"_id\":\"(\\d+)\"", 1).as("id"))
-      .collect().map(_.getString(0).toInt).sorted.toSeq
-    assert(ids === (0 until nFiles * perFile),
+    assert(relayedIds(spark.read.parquet(out)) === (0 until nFiles * perFile),
       "resume must deliver every event exactly once across the restart")
   }
 

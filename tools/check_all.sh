@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Dev-only full validation: clean build, tests, oracle cross-check at two
-# scales, flagship smoke, bench. Mirrors the driver's round gates.
+# scales, flagship smoke, bench and the benchmark's smoke run.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -14,4 +14,7 @@ python3 tools/xcheck.py /root/testdata/sf0.001 /tmp/vout_ca001
 
 sbt -batch "runMain graft.Demo" | grep -a "rows=799"
 sbt -batch "runMain graft.Bench" | grep -a '"metric"'
+# every perfbench workload at a tiny size with its output checks on: relay
+# rows against the generator's own, lake outputs through xcheck.py
+python3 perfbench/run.py --smoke
 echo "ALL CHECKS PASSED"
