@@ -2,12 +2,19 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.glue
 import org.apache.spark.sql.types._
 
 /** The reference's entire dataflow (a MongoDB change-stream → Kafka relay,
   * `/root/reference/main.go`) re-expressed as pure `DataFrame => DataFrame`
   * transforms so the exact same code serves batch fixtures, golden tests and
   * the Structured Streaming runtime ([[graft.streaming.ChangeStreamRelay]]).
+  *
+  * Like the reference, which decodes each event once and marshals it once
+  * (main.go:104-108,117,123-131,138), the relay parses each line once and
+  * renders each key and value once, straight to UTF-8, through the native
+  * expressions of the change-event codec (`ChangeEventCodec.scala`):
+  * [[ParseChangeEvent]], [[ChangeEventKey]] and [[ChangeEventValue]].
   *
   * Reference semantics reproduced here (citations into /root/reference):
   *  - topic routing `"{db}.{coll}"`            — main.go:113
@@ -19,7 +26,8 @@ import org.apache.spark.sql.types._
   *    lack `documentKey`/`ns.coll`, main.go:111-116; we filter + dead-letter
   *    instead — intentional improvement, SURVEY.md §2.2/§7.5)
   *  - per-event error suppression (decode error ⇒ skip, main.go:106-108) ⇒
-  *    PERMISSIVE JSON parse + null filter.
+  *    a malformed line parses to an all-NULL row, which the op filter
+  *    drops and [[deadLetter]] keeps.
   *
   * Scale notes: every transform is narrow (no shuffle) — a 1000-executor
   * cluster runs the relay embarrassingly parallel, partitioned by the
@@ -55,14 +63,13 @@ object ChangeEvents {
   /** Kafka-Connect key envelope around an ExtJSON payload string
     * (main.go:123-131): field order and the constant
     * `{"type":"string","optional":false}` schema stamp match the
-    * reference's `json.Marshal` output byte-for-byte.
+    * reference's `json.Marshal` output byte-for-byte. The payload is
+    * escaped by the ExtJSON escaper, which follows Go's encoding/json with
+    * HTML escaping (`<`, `>`, `&` included). Without a payload (NULL) the
+    * envelope has no `payload` member.
     */
   def connectKeyEnvelope(payload: Column): Column =
-    to_json(struct(
-      struct(
-        lit("string").as("type"),
-        lit(false).as("optional")).as("schema"),
-      payload.as("payload")))
+    glue.toColumn(ChangeEventKey(glue.toExpression(payload)))
 
   /** Keep only the four document ops; everything else (invalidate, drop,
     * dropDatabase, rename, …) goes to the dead-letter side ([[deadLetter]]).
@@ -77,52 +84,48 @@ object ChangeEvents {
     df.filter(!col(opCol).isin(DocumentOps: _*) || col(opCol).isNull)
 
   /** Parse raw change-event JSON lines (the file-based stand-in for the
-    * change-stream wire format) into the typed envelope. Decode failures
-    * become rows with a null `operationType` plus the raw line in `_raw` —
-    * [[deadLetter]] captures them instead of the reference's silent
-    * decode-error-skip (main.go:106-108); [[opFilter]] (and thus the relay
-    * hot path) never sees them.
+    * change-stream wire format) into the typed envelope, one
+    * `parse_change_event` ([[ParseChangeEvent]]) call per line, plus the
+    * raw line in `_raw`. A blank line gives no row. A malformed line
+    * gives a row whose envelope fields are all NULL — [[deadLetter]]
+    * captures it instead of the reference's silent decode-error-skip
+    * (main.go:106-108); [[opFilter]] (and thus the relay hot path) never
+    * sees it. Batch frames, `MemoryStream` tests and the file source
+    * ([[graft.streaming.ChangeStreamRelay.readChangeStream]]) all parse
+    * here.
     */
   def parseEnvelope(raw: DataFrame, jsonCol: String = "value"): DataFrame =
-    raw
-      .withColumn("ev", from_json(col(jsonCol), envelopeSchema))
-      .select(col("ev.*"), col(jsonCol).as("_raw"))
+    raw.select(
+      glue.toColumn(ParseChangeEvent(glue.toExpression(col(jsonCol)))),
+      col(jsonCol).as("_raw"))
 
   /** Kafka value = canonical ExtJSON of the WHOLE event with the dynamic
-    * payloads as NESTED OBJECTS (main.go:138, FIXTURES.md §1): the
-    * envelope's `clusterTime`/`documentKey`/`fullDocument`/
-    * `updateDescription` columns already hold canonical-ExtJSON text, so
-    * they are spliced in RAW — running them through `to_json` would
-    * re-escape them into string literals and break every consumer of the
-    * reference's topics. Typed fields (`_id`, `operationType`, `ns`) go
-    * through [[graft.functions.ExtJson.ext_json_canonical]] for correct
-    * escaping; null payload fields are ABSENT (a delete has no
-    * `fullDocument`), matching MarshalExtJSON of the reference's `bson.M`.
+    * payloads as NESTED OBJECTS (main.go:138, FIXTURES.md §1), rendered
+    * by [[ChangeEventValue]] from the envelope columns in one pass. The
+    * `clusterTime`/`documentKey`/`fullDocument`/`updateDescription`
+    * columns hold canonical-ExtJSON text, which is spliced in RAW when it
+    * is one well-formed JSON object or array — running it through
+    * `to_json` would re-escape it into a string literal and break every
+    * consumer of the reference's topics. Any other payload text (an ISO
+    * date, a plain string, broken JSON) is written as a JSON string, so
+    * the value is always valid JSON. `_id` and `operationType` are JSON
+    * strings and `ns` is canonical ExtJSON (`null` when NULL); NULL
+    * payload fields are ABSENT (a delete has no `fullDocument`), matching
+    * MarshalExtJSON of the reference's `bson.M`.
+    *
+    * `_id` fidelity note: a REAL change stream's `_id` is the resume
+    * token, a nested document `{"_data":…}` which MarshalExtJSON emits as
+    * an OBJECT — pass `idIsExtJson = true` when the envelope carries it
+    * as canonical-ExtJSON text (the connector path,
+    * [[normalizeConnectorEnvelope]]) and it splices like a payload. The
+    * default renders it as a JSON string, matching FIXTURES.md's
+    * opaque-string `_id` — the one deliberate divergence from wire-byte
+    * parity when fixtures use simple ids.
     */
   def eventValue(idIsExtJson: Boolean = false): Column = {
-    import graft.functions.ExtJson.ext_json_canonical
-    def raw(name: String): Column =
-      when(col(name).isNotNull,
-        concat(lit(",\"" + name + "\":"), col(name))).otherwise(lit(""))
-    // `_id` fidelity note: a REAL change stream's `_id` is the resume
-    // token, a nested document `{"_data":…}` which MarshalExtJSON emits
-    // as an OBJECT — pass `idIsExtJson = true` when the envelope carries
-    // it as canonical-ExtJSON text (the connector path,
-    // [[normalizeConnectorEnvelope]]) and it splices raw. The default
-    // renders it as a JSON string, matching FIXTURES.md's opaque-string
-    // `_id` — the one deliberate divergence from wire-byte parity when
-    // fixtures use simple ids.
-    val idPart =
-      if (idIsExtJson) col("_id") else ext_json_canonical(col("_id"))
-    concat(
-      lit("{\"_id\":"), idPart,
-      lit(",\"operationType\":"), ext_json_canonical(col("operationType")),
-      raw("clusterTime"),
-      lit(",\"ns\":"), ext_json_canonical(col("ns")),
-      raw("documentKey"),
-      raw("fullDocument"),
-      raw("updateDescription"),
-      lit("}"))
+    def e(name: String) = glue.toExpression(col(name))
+    glue.toColumn(ChangeEventValue(e("_id"), e("operationType"), e("clusterTime"), e("ns"),
+      e("documentKey"), e("fullDocument"), e("updateDescription"), idIsExtJson))
   }
 
   /** Normalize the mongo-spark connector's TYPED change-stream columns to

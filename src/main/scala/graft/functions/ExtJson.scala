@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.graftglue.glue
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Canonical MongoDB Extended JSON rendering — the reference's de-facto type
@@ -23,9 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Spark's `to_json` cannot produce these wrappers, hence a native Catalyst
   * expression (not a Scala UDF: no SerDe of the input row to JVM objects —
-  * we walk the InternalRow/UnsafeRow directly; CodegenFallback keeps the
-  * surrounding projection in whole-stage codegen with a single virtual call
-  * per row).
+  * we walk the InternalRow/UnsafeRow directly and write UTF-8 bytes into
+  * a [[Utf8Sink]] reused across rows, one copy per result).
   */
 case class ExtJsonCanonical(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -37,42 +37,157 @@ case class ExtJsonCanonical(child: Expression)
   override protected def withNewChildInternal(newChild: Expression): ExtJsonCanonical =
     copy(child = newChild)
 
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString {
-      val sb = new java.lang.StringBuilder(64)
-      ExtJsonCanonical.render(sb, input, child.dataType)
-      sb.toString
+  @transient private lazy val out = new Utf8Sink
+
+  override def nullSafeEval(input: Any): Any = {
+    out.reset()
+    ExtJsonCanonical.render(out, input, child.dataType)
+    out.toUTF8String
+  }
+}
+
+/** A growable buffer of UTF-8 bytes: the JSON renderers write their
+  * output straight into it, with no `String` in between.
+  */
+final class Utf8Sink {
+  private var buf = new Array[Byte](256)
+  private var len = 0
+
+  def reset(): Unit = len = 0
+
+  private def room(n: Int): Unit =
+    if (len + n > buf.length)
+      buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + n))
+
+  def byte(b: Int): Unit = { room(1); buf(len) = b.toByte; len += 1 }
+
+  /** Appends a string whose characters are all ASCII. */
+  def ascii(s: String): Unit = {
+    val n = s.length
+    room(n)
+    var i = 0
+    while (i < n) { buf(len + i) = s.charAt(i).toByte; i += 1 }
+    len += n
+  }
+
+  def bytes(src: Array[Byte]): Unit = {
+    room(src.length)
+    System.arraycopy(src, 0, buf, len, src.length)
+    len += src.length
+  }
+
+  /** Appends `n` bytes read from `base` at address `off` (the
+    * addressing of `UTF8String` and `Platform`).
+    */
+  def bytes(base: AnyRef, off: Long, n: Int): Unit = {
+    room(n)
+    base match {
+      // arraycopy is an intrinsic of both JIT tiers; Platform.copyMemory
+      // is a native call under C1, costly for the short runs copied here
+      case a: Array[Byte] =>
+        System.arraycopy(a, (off - Platform.BYTE_ARRAY_OFFSET).toInt, buf, len, n)
+      case _ => Platform.copyMemory(base, off, buf, Platform.BYTE_ARRAY_OFFSET + len, n)
     }
+    len += n
+  }
+
+  def toUTF8String: UTF8String = UTF8String.fromBytes(java.util.Arrays.copyOf(buf, len))
 }
 
 object ExtJsonCanonical {
 
-  /** JSON string escape matching Go's encoding/json with escapeHTML=true
-    * (main.go:117's second `true`): `<`, `>`, `&` are \u-escaped too.
+  /** Escapes of the ASCII bytes the escaper rewrites, null for the
+    * bytes it copies: Go's encoding/json with escapeHTML=true (main.go:117's
+    * second `true`), so `<`, `>`, `&` are \u-escaped too.
     */
-  private def escape(sb: java.lang.StringBuilder, s: String): Unit = {
-    sb.append('"')
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '"'  => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case '<'  => sb.append("\\u003c")
-        case '>'  => sb.append("\\u003e")
-        case '&'  => sb.append("\\u0026")
-        // Go's encoding/json always escapes the JS line separators
-        case '\u2028' => sb.append("\\u2028")
-        case '\u2029' => sb.append("\\u2029")
-        case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
+  private val AsciiEscape: Array[Array[Byte]] = {
+    val t = new Array[Array[Byte]](128)
+    def set(c: Int, e: String): Unit = t(c) = e.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+    (0 until 0x20).foreach(c => set(c, f"\\u$c%04x"))
+    set('\n', "\\n"); set('\r', "\\r"); set('\t', "\\t")
+    set('"', "\\\""); set('\\', "\\\\")
+    set('<', "\\u003c"); set('>', "\\u003e"); set('&', "\\u0026")
+    t
+  }
+  private val LineSep = "\\u2028".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private val ParaSep = "\\u2029".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private val Replacement = Array(0xEF.toByte, 0xBF.toByte, 0xBD.toByte)
+
+  /** Length of the well-formed UTF-8 sequence that starts with the
+    * non-ASCII byte at `off` (2 to 4), or minus the length of its
+    * maximal ill-formed prefix (Unicode §3.9), which a decoder replaces
+    * with one U+FFFD. `avail` bytes are readable from `off`.
+    */
+  private[graft] def utf8Length(base: AnyRef, off: Long, avail: Int): Int = {
+    val b0 = Platform.getByte(base, off) & 0xFF
+    var n = 0
+    var lo = 0x80 // range of the second byte
+    var hi = 0xBF
+    if (b0 >= 0xC2 && b0 <= 0xDF) n = 2
+    else if (b0 >= 0xE0 && b0 <= 0xEF) {
+      n = 3; if (b0 == 0xE0) lo = 0xA0 else if (b0 == 0xED) hi = 0x9F
+    } else if (b0 >= 0xF0 && b0 <= 0xF4) {
+      n = 4; if (b0 == 0xF0) lo = 0x90 else if (b0 == 0xF4) hi = 0x8F
+    } else return -1
+    var i = 1
+    while (i < n) {
+      if (i >= avail) return -i
+      val c = Platform.getByte(base, off + i) & 0xFF
+      if (if (i == 1) c < lo || c > hi else c < 0x80 || c > 0xBF) return -i
       i += 1
     }
-    sb.append('"')
+    n
+  }
+
+  /** JSON string escape matching Go's encoding/json with escapeHTML=true
+    * (main.go:117), over the UTF-8 bytes at `base`/`off`: `"`, `\`,
+    * controls (`\n`, `\r`, `\t`, else `\u00xx`), `<`, `>`, `&` and the
+    * JS line separators U+2028/U+2029 are escaped; every other character
+    * is copied as is. Ill-formed UTF-8 is replaced by U+FFFD, as a
+    * decoder would.
+    */
+  private[graft] def escape(out: Utf8Sink, base: AnyRef, off: Long, n: Int): Unit = {
+    val table = AsciiEscape // a local: C1 reloads fields on every iteration
+    out.byte('"')
+    var i = 0
+    var run = 0 // start of the bytes copied as they are
+    while (i < n) {
+      val b = Platform.getByte(base, off + i)
+      if (b >= 0) {
+        val e = table(b)
+        if (e != null) {
+          out.bytes(base, off + run, i - run); out.bytes(e); run = i + 1
+        }
+        i += 1
+      } else {
+        val k = utf8Length(base, off + i, n - i)
+        if (k == 3 && b == 0xE2.toByte && Platform.getByte(base, off + i + 1) == 0x80.toByte &&
+            (Platform.getByte(base, off + i + 2) & 0xFE) == 0xA8) {
+          out.bytes(base, off + run, i - run)
+          out.bytes(if (Platform.getByte(base, off + i + 2) == 0xA8.toByte) LineSep else ParaSep)
+          run = i + 3
+        } else if (k < 0) {
+          out.bytes(base, off + run, i - run); out.bytes(Replacement); run = i - k
+        }
+        i += math.abs(k)
+      }
+    }
+    out.bytes(base, off + run, n - run)
+    out.byte('"')
+  }
+
+  private[graft] def escape(out: Utf8Sink, s: UTF8String): Unit =
+    escape(out, s.getBaseObject, s.getBaseOffset, s.numBytes)
+
+  /** [[escape]] of a `String`; a name of plain printable ASCII, such as
+    * most field names, is copied without an intermediate `UTF8String`.
+    */
+  private def escape(out: Utf8Sink, s: String): Unit = {
+    var i = 0
+    while (i < s.length && { val c = s.charAt(i); c >= ' ' && c < 0x7F && AsciiEscape(c) == null })
+      i += 1
+    if (i < s.length) escape(out, UTF8String.fromString(s))
+    else { out.byte('"'); out.ascii(s); out.byte('"') }
   }
 
   /** Double text matching the Go mongo-driver's canonical-ExtJSON
@@ -130,36 +245,36 @@ object ExtJsonCanonical {
     }
   }
 
-  def render(sb: java.lang.StringBuilder, v: Any, dt: DataType): Unit = {
-    if (v == null) { sb.append("null"); return }
+  def render(out: Utf8Sink, v: Any, dt: DataType): Unit = {
+    if (v == null) { out.ascii("null"); return }
+    if (v.isInstanceOf[UTF8String]) { escape(out, v.asInstanceOf[UTF8String]); return }
     dt match {
-      case StringType => escape(sb, v.asInstanceOf[UTF8String].toString)
-      case BooleanType => sb.append(v.toString)
+      case BooleanType => out.ascii(v.toString)
       case ByteType | ShortType | IntegerType =>
-        sb.append("{\"$numberInt\":\"").append(v.toString).append("\"}")
+        out.ascii("{\"$numberInt\":\""); out.ascii(v.toString); out.ascii("\"}")
       case LongType =>
-        sb.append("{\"$numberLong\":\"").append(v.toString).append("\"}")
+        out.ascii("{\"$numberLong\":\""); out.ascii(v.toString); out.ascii("\"}")
       case FloatType | DoubleType =>
         val d = v match {
           case f: java.lang.Float => f.toDouble
           case d: java.lang.Double => d.doubleValue()
         }
-        sb.append("{\"$numberDouble\":\"").append(doubleText(d)).append("\"}")
+        out.ascii("{\"$numberDouble\":\""); out.ascii(doubleText(d)); out.ascii("\"}")
       case _: DecimalType =>
-        sb.append("{\"$numberDecimal\":\"")
-          .append(v.asInstanceOf[Decimal].toBigDecimal.bigDecimal.toPlainString)
-          .append("\"}")
+        out.ascii("{\"$numberDecimal\":\"")
+        out.ascii(v.asInstanceOf[Decimal].toBigDecimal.bigDecimal.toPlainString)
+        out.ascii("\"}")
       case TimestampType | TimestampNTZType =>
         // stored micros → BSON $date is epoch millis; floorDiv, not /, so
         // pre-1970 sub-millisecond values floor like Go's time.UnixMilli
         val ms = Math.floorDiv(v.asInstanceOf[Long], 1000L)
-        sb.append("{\"$date\":{\"$numberLong\":\"").append(ms).append("\"}}")
+        out.ascii("{\"$date\":{\"$numberLong\":\""); out.ascii(ms.toString); out.ascii("\"}}")
       case DateType =>
         val ms = v.asInstanceOf[Int].toLong * 86400000L
-        sb.append("{\"$date\":{\"$numberLong\":\"").append(ms).append("\"}}")
+        out.ascii("{\"$date\":{\"$numberLong\":\""); out.ascii(ms.toString); out.ascii("\"}}")
       case BinaryType =>
         val b64 = java.util.Base64.getEncoder.encodeToString(v.asInstanceOf[Array[Byte]])
-        sb.append("{\"$binary\":{\"base64\":\"").append(b64).append("\",\"subType\":\"00\"}}")
+        out.ascii("{\"$binary\":{\"base64\":\""); out.ascii(b64); out.ascii("\",\"subType\":\"00\"}}")
       // BSON Timestamp carries its t/i as PLAIN JSON numbers in canonical
       // ExtJSON (the one spec'd exception to scalar tagging) — a struct
       // following the {"$timestamp":{t,i}} convention renders that way
@@ -173,49 +288,51 @@ object ExtJsonCanonical {
             }) && !v.asInstanceOf[InternalRow].isNullAt(0) =>
         val inner = st(0).dataType.asInstanceOf[StructType]
         val ts = v.asInstanceOf[InternalRow].getStruct(0, 2)
-        sb.append("{\"$timestamp\":{\"t\":")
-          .append(String.valueOf(ts.get(0, inner(0).dataType)))
-          .append(",\"i\":")
-          .append(String.valueOf(ts.get(1, inner(1).dataType)))
-          .append("}}")
+        out.ascii("{\"$timestamp\":{\"t\":")
+        out.ascii(String.valueOf(ts.get(0, inner(0).dataType)))
+        out.ascii(",\"i\":")
+        out.ascii(String.valueOf(ts.get(1, inner(1).dataType)))
+        out.ascii("}}")
       case st: StructType =>
         val row = v.asInstanceOf[InternalRow]
-        sb.append('{')
+        out.byte('{')
         var i = 0
         while (i < st.length) {
-          if (i > 0) sb.append(',')
-          escape(sb, st(i).name)
-          sb.append(':')
-          render(sb, if (row.isNullAt(i)) null else row.get(i, st(i).dataType), st(i).dataType)
+          if (i > 0) out.byte(',')
+          escape(out, st(i).name)
+          out.byte(':')
+          render(out, if (row.isNullAt(i)) null else row.get(i, st(i).dataType), st(i).dataType)
           i += 1
         }
-        sb.append('}')
+        out.byte('}')
       case at: ArrayType =>
         val arr = v.asInstanceOf[ArrayData]
-        sb.append('[')
+        out.byte('[')
         var i = 0
         while (i < arr.numElements()) {
-          if (i > 0) sb.append(',')
-          render(sb, if (arr.isNullAt(i)) null else arr.get(i, at.elementType), at.elementType)
+          if (i > 0) out.byte(',')
+          render(out, if (arr.isNullAt(i)) null else arr.get(i, at.elementType), at.elementType)
           i += 1
         }
-        sb.append(']')
+        out.byte(']')
       case mt: MapType =>
         val m = v.asInstanceOf[MapData]
         val keys = m.keyArray(); val vals = m.valueArray()
-        sb.append('{')
+        out.byte('{')
         var i = 0
         while (i < m.numElements()) {
-          if (i > 0) sb.append(',')
-          val k = keys.get(i, mt.keyType)
-          escape(sb, String.valueOf(k))
-          sb.append(':')
-          render(sb, if (vals.isNullAt(i)) null else vals.get(i, mt.valueType), mt.valueType)
+          if (i > 0) out.byte(',')
+          keys.get(i, mt.keyType) match {
+            case k: UTF8String => escape(out, k)
+            case k => escape(out, String.valueOf(k))
+          }
+          out.byte(':')
+          render(out, if (vals.isNullAt(i)) null else vals.get(i, mt.valueType), mt.valueType)
           i += 1
         }
-        sb.append('}')
-      case other =>
-        escape(sb, String.valueOf(v))
+        out.byte('}')
+      case _ =>
+        escape(out, String.valueOf(v))
     }
   }
 }

@@ -13,10 +13,12 @@ import graft.cdc.ChangeEvents
   * Structured Streaming; only source/sink/state wiring lives here.
   *
   * Dataflow = R1…R13 of SURVEY.md §2.1:
-  *   readStream (change-event JSON)            — R1 `Watch`, main.go:90-99
-  *   → parseEnvelope (PERMISSIVE, drop bad)    — R3 decode-skip, main.go:104-108
+  *   readStream.text (change-event lines)     — R1 `Watch`, main.go:90-99
+  *   → parseEnvelope: parse_change_event once
+  *     per line, malformed → all-NULL row      — R3 decode-skip, main.go:104-108
   *   → opFilter / deadLetter split             — §2.2 (reference panics)
-  *   → relay: topic/key/value                  — R4-R8, main.go:111-142
+  *   → relay: topic, key and value rendered
+  *     straight to UTF-8                       — R4-R8, main.go:111-142
   *   → topic-sorted parquet sink, checkpointed — R9 produce + R12 flush
   *
   * Intentional improvements over the reference (SURVEY.md §7.5), all
@@ -33,17 +35,18 @@ import graft.cdc.ChangeEvents
 object ChangeStreamRelay {
 
   /** File-based change-event source: line-delimited JSON with the
-    * change-stream envelope (FIXTURES.md §1). Drop-in replacement for the
-    * MongoDB connector source (`readStream.format("mongodb")` with
-    * `spark.mongodb.change.stream.*`) when that jar is on the classpath —
-    * the downstream pipeline is identical.
+    * change-stream envelope (FIXTURES.md §1), read as text and parsed
+    * once per line by [[ChangeEvents.parseEnvelope]], so
+    * `numInputRows` counts every line read, malformed ones included.
+    * Drop-in replacement for the MongoDB connector source
+    * (`readStream.format("mongodb")` with `spark.mongodb.change.stream.*`)
+    * when that jar is on the classpath — the downstream pipeline is
+    * identical.
     */
   def readChangeStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 16): DataFrame =
-    spark.readStream
-      .schema(ChangeEvents.envelopeSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dir)
+    ChangeEvents.parseEnvelope(
+      spark.readStream.option("maxFilesPerTrigger", maxFilesPerTrigger).text(dir))
 
   /** The relay transform on an already-parsed envelope stream. */
   def relay(envelope: DataFrame): DataFrame = ChangeEvents.relay(envelope)

@@ -114,13 +114,80 @@ class RelayStreamingSpec extends SparkSpec {
     finally s.close()
   }
 
-  // Relayed event ids (the envelope `_id`, read from `value`), sorted. A
-  // regex, not get_json_object: this spec's synthetic events carry an
-  // ISO-string clusterTime (the window tests to_timestamp it), which the
-  // raw splice renders unquoted — real fixtures carry $timestamp objects.
+  // Relayed event ids (the envelope `_id`, read from `value` as JSON),
+  // sorted. Every relayed value is a JSON document, whatever text its
+  // payloads hold; a value that is not would read as a NULL id here.
   private def relayedIds(relayed: DataFrame): Seq[Int] =
-    relayed.select(regexp_extract(col("value"), "^\\{\"_id\":\"(\\d+)\"", 1))
+    relayed.select(get_json_object(col("value"), "$._id"))
       .collect().map(_.getString(0).toInt).sorted.toSeq
+
+  test("relayed values are valid JSON when payloads are plain strings") {
+    val src = Files.createTempDirectory("strings_src").toString
+    val out = Files.createTempDirectory("strings_out").toString
+    val chk = Files.createTempDirectory("strings_chk").toString
+    def event(id: Int, payloads: String) =
+      s"""{"_id":"$id","operationType":"insert","ns":{"db":"app","coll":"c"},$payloads}"""
+    Files.writeString(java.nio.file.Paths.get(s"$src/events.json"), Seq(
+      event(1, """"clusterTime":"2024-01-01T00:00:00Z","documentKey":"{\"_id\":1}",""" +
+        """"fullDocument":"plain string""""),
+      // string payloads that open like JSON but are not JSON
+      event(2, """"documentKey":"{\"_id\":2}","fullDocument":"{not json",""" +
+        """"updateDescription":"[1,""""),
+      ev(3, "insert")).mkString("\n"))
+    ChangeStreamRelay.run(spark, src, out, chk).awaitTermination()
+
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val values = spark.read.parquet(out).select("value").collect().map(_.getString(0))
+    val byId = values.map { v =>
+      val t = scala.util.Try(mapper.readTree(v))
+      assert(t.isSuccess, s"not JSON: $v")
+      t.get.get("_id").asText -> t.get
+    }.toMap
+    assert(byId.keySet === Set("1", "2", "3"))
+    def text(id: String, f: String): String = {
+      val n = byId(id).get(f)
+      assert(n.isTextual, s"$f of event $id must stay a string: ${byId(id)}")
+      n.asText
+    }
+    assert(text("1", "clusterTime") === "2024-01-01T00:00:00Z")
+    assert(text("1", "fullDocument") === "plain string")
+    assert(text("2", "fullDocument") === "{not json")
+    assert(text("2", "updateDescription") === "[1,")
+    // object text is still spliced as a nested object
+    assert(byId("1").get("documentKey").get("_id").asInt === 1)
+    assert(byId("3").get("fullDocument").get("v").asInt === 3)
+  }
+
+  test("the relay parses each line once, and numInputRows counts every line read") {
+    import org.apache.spark.sql.catalyst.expressions.{JsonToStructs, StructsToJson}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import graft.cdc.ParseChangeEvent
+    val src = Files.createTempDirectory("count_src").toString
+    val lines = Seq(ev(1, "insert"), ev(2, "update"), "not json", ev(3, "invalidate"),
+      "", """{"_id":"4","operationType":"ins""", ev(5, "delete"), ev(6, "drop"))
+    Files.writeString(java.nio.file.Paths.get(s"$src/events.json"), lines.mkString("\n"))
+
+    val out = Files.createTempDirectory("count_out").toString
+    val q = ChangeStreamRelay.run(spark, src, out,
+      Files.createTempDirectory("count_chk").toString)
+    q.awaitTermination()
+    assert(q.recentProgress.map(_.numInputRows).sum === lines.size)
+    assert(relayedIds(spark.read.parquet(out)) === Seq(1, 2, 5))
+
+    // the plan of its micro-batch
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    val nodes = allNodes(plan)
+    val exprs = nodes.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(exprs.count(_.isInstanceOf[ParseChangeEvent]) === 1,
+      s"parse_change_event must run once per line:\n$plan")
+    assert(nodes.count(_.isInstanceOf[GenerateExec]) === 1, plan)
+    assert(!exprs.exists(e => e.isInstanceOf[JsonToStructs] || e.isInstanceOf[StructsToJson] ||
+      e.prettyName == "concat"), s"no JSON reader or concat/to_json chain:\n$plan")
+    val formats = nodes.collect { case s: FileSourceScanExec => s.relation.fileFormat }
+    assert(formats.nonEmpty && formats.forall(_.isInstanceOf[TextFileFormat]), plan)
+  }
 
   test("sink writes one topic-sorted parquet file per task, no topic= directories") {
     val src = Files.createTempDirectory("sink_src").toString
