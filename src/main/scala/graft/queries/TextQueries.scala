@@ -156,8 +156,8 @@ object TextQueries extends QueryPack {
           .groupBy("word").agg(count(lit(1)).as("freq"))
         // the r16 scalable contract: ONE distributed dict pass, counted
         // guarded collect, in-memory incremental merge loop — zero Spark
-        // jobs per merge step (bit-identical to the distributed learn
-        // within the cap; BpeSpec pins the three-way parity)
+        // jobs per merge step (bit-identical to the learnLocal reference
+        // within the cap; BpeSpec pins the parity)
         graft.text.Bpe.learnScalable(s, words, steps)
       }
   }
@@ -321,7 +321,7 @@ object TextQueries extends QueryPack {
       * full BPE iteration — pair-count over the space-wrapped symbol
       * encodings (adjacent-symbol extraction via list indexing, freq-
       * weighted sum), the deterministic argmax (cnt DESC, l ASC, r ASC —
-      * [[graft.text.Bpe.learn]]'s exact tie-break), and the greedy
+      * [[graft.text.Bpe.learnScalable]]'s exact tie-break), and the greedy
       * non-overlapping merge rewrite as ONE `replace()` over the
       * encoding (the r13 [[mergeReplay]] device: every symbol owns both
       * its delimiters, so leftmost-first replacement IS the Scala scan).
@@ -1877,8 +1877,8 @@ object TextQueries extends QueryPack {
     // over the space-wrapped encoding — [[TextOracle.bpeTrainSql]]), so
     // the LEARN itself is certified bit-for-bit against an independent
     // engine, not just the apply. BpeSpec additionally proves the
-    // distributed learner bit-equal to a local reference implementation
-    // on the same dict, plus tie-break determinism.
+    // learner bit-equal to a local reference implementation on the same
+    // dict, plus tie-break determinism.
     Q("text_bpe_train",
       (s, dir) => {
         val merges = SharedBpeMerges(s, dir, 8)

@@ -79,8 +79,7 @@ object ChangeStreamRelay {
     */
   def topicCounts(envelope: DataFrame,
       eventTimeCol: String, watermark: String, window_ : String): DataFrame =
-    ChangeEvents.opFilter(envelope)
-      .withColumn("topic", ChangeEvents.topicColumn(col("ns.db"), col("ns.coll")))
+    relayedWithTopic(envelope)
       .withWatermark(eventTimeCol, watermark)
       .groupBy(window(col(eventTimeCol), window_), col("topic"))
       .agg(count(lit(1)).as("n"))
@@ -92,13 +91,15 @@ object ChangeStreamRelay {
     */
   def topicSessions(envelope: DataFrame,
       eventTimeCol: String, watermark: String, gap: String): DataFrame =
+    SessionWindows.sessionCounts(relayedWithTopic(envelope), "topic",
+      eventTimeCol, gap, watermark)
+      .select(col("start").as("session_start"), col("end").as("session_end"),
+        col("topic"), col("n"))
+
+  /** The relayed events (op whitelist) with their `db.coll` topic. */
+  private def relayedWithTopic(envelope: DataFrame): DataFrame =
     ChangeEvents.opFilter(envelope)
       .withColumn("topic", ChangeEvents.topicColumn(col("ns.db"), col("ns.coll")))
-      .withWatermark(eventTimeCol, watermark)
-      .groupBy(session_window(col(eventTimeCol), gap), col("topic"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"), col("topic"), col("n"))
 
   /** Kafka-shaped sink. Without the kafka-sql jar (this container), the
     * `foreachBatch` writer persists each micro-batch as parquet, one file

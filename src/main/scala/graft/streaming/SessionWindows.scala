@@ -32,13 +32,21 @@ object SessionWindows {
     */
   def sessionize(events: DataFrame, gapSeconds: Int,
       watermarkDelay: String): DataFrame =
+    sessionCounts(events, "user_id", "ts", s"$gapSeconds seconds", watermarkDelay)
+      .select(col("user_id"), col("start"), col("end"), col("n").as("n_events"))
+
+  /** The one watermarked `session_window` count: rows (`key`, start,
+    * end, n), one per closed session of `key`. [[sessionize]] and
+    * [[ChangeStreamRelay.topicSessions]] rename its columns.
+    */
+  private[streaming] def sessionCounts(events: DataFrame, key: String,
+      eventTimeCol: String, gap: String, watermark: String): DataFrame =
     events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(col("user_id"),
-        session_window(col("ts"), s"$gapSeconds seconds"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
+      .withWatermark(eventTimeCol, watermark)
+      .groupBy(col(key), session_window(col(eventTimeCol), gap))
+      .agg(count(lit(1)).as("n"))
+      .select(col(key),
         col("session_window.start").as("start"),
         col("session_window.end").as("end"),
-        col("n_events"))
+        col("n"))
 }

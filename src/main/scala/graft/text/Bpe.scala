@@ -1,41 +1,28 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
-/** Distributed byte-pair-encoding merge learning — the tokenizer-training
-  * step of an LLM data pipeline (the reference relay only moves documents;
-  * training a vocabulary over them is squarely in the extension surface).
+/** Byte-pair-encoding merge learning — the tokenizer-training step of an
+  * LLM data pipeline (the reference relay only moves documents; training
+  * a vocabulary over them is squarely in the extension surface).
   *
   * Classic BPE (Sennrich et al. 2016, public): start from characters,
   * repeatedly merge the most frequent adjacent symbol pair, weighted by
   * word frequency.
   *
-  * Scale shape:
+  * Scale shape ([[learnScalable]], the one production learner):
   *  - **The corpus is scanned exactly once** — to build the word-frequency
   *    dictionary (one shuffle, partial-aggregated). Every merge iteration
   *    runs over the VOCAB-sized dict (unique words), which is orders of
   *    magnitude smaller than the corpus and independent of corpus growth
   *    past saturation; 100 TB of text changes the freq column, not the
   *    dict height.
-  *  - **The merge loop itself is in-memory since r16**
-  *    ([[learnScalable]]): the dict collects under a counted guard
-  *    (frequency-truncated sample-then-train beyond it) and V merges
-  *    cost zero further Spark jobs. The bullets below describe
-  *    [[learn]], the fully-distributed fallback.
-  *  - **Per iteration**: adjacent pairs are generated IN-ROW with
-  *    higher-order functions (no positional self-join), partial-aggregated
-  *    by pair, and only the single argmax row is collected — the driver
-  *    sees one row per step, Lloyd's-iteration style (cf.
-  *    `similarity/KMeans.scala`), never the dict.
-  *  - **Lineage is truncated per step**: each rewritten dict is persisted
-  *    and the previous one unpersisted once the next materializes, so step
-  *    k costs O(vocab), not O(k · vocab) recompute.
-  *  - The pair rewrite (greedy left-to-right single pass) is a Scala UDF
-  *    over the dict only — never on the corpus path, where a UDF would
-  *    break codegen.
+  *  - **The merge loop is in-memory**: the dict collects under a counted
+  *    guard (frequency-truncated sample-then-train beyond it) and V
+  *    merges cost zero further Spark jobs.
+  *  - [[learnLocal]] is the plain full-recount reference the incremental
+  *    trainer is checked against (BpeSpec).
   *
   * Determinism: ties in pair frequency break on (freq DESC, left ASC,
   * right ASC); the rewrite is a deterministic left-to-right scan. The
@@ -61,54 +48,6 @@ object Bpe {
     out.toSeq
   }
 
-  /** Word-frequency dict → initial symbol rows: (syms: array<string>, freq). */
-  private def initialDict(words: DataFrame): DataFrame =
-    words.select(
-      expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))").as("syms"),
-      col("freq"))
-
-  /** Learn `steps` merges from a (word, freq) dictionary with the
-    * FULLY-DISTRIBUTED per-step loop (one collected argmax row per
-    * merge). Correct at any dict size but V merges = V sequential Spark
-    * jobs — use [[learnScalable]] (the declared query's path since r16)
-    * unless the dict genuinely cannot be frequency-truncated to driver
-    * memory; this stays as the no-collect fallback and the cross-
-    * implementation parity anchor (BpeSpec).
-    */
-  def learn(spark: SparkSession, words: DataFrame, steps: Int): Seq[Merge] = {
-    val mergeUdf = udf((syms: Seq[String], l: String, r: String) => mergeOnce(syms, l, r))
-    var dict = initialDict(words).persist(StorageLevel.MEMORY_AND_DISK)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    try {
-      var step = 1
-      var done = false
-      while (step <= steps && !done) {
-        val top = dict
-          .select(col("freq"), explode(expr(
-            """transform(slice(syms, 1, size(syms) - 1),
-                 (x, i) -> struct(x AS l, element_at(syms, i + 2) AS r))""")).as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum("freq").as("cnt"))
-          .orderBy(col("cnt").desc, col("l"), col("r"))
-          .limit(1)
-          .collect()
-        if (top.isEmpty) done = true
-        else {
-          val Row(l: String, r: String, cnt: Long) = top(0)
-          merges += Merge(step, l, r, l + r, cnt)
-          val next = dict
-            .withColumn("syms", mergeUdf(col("syms"), lit(l), lit(r)))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          next.count() // materialize before dropping the parent lineage
-          dict.unpersist()
-          dict = next
-          step += 1
-        }
-      }
-      merges.toSeq
-    } finally dict.unpersist()
-  }
-
   /** Tokenizer APPLY step: encode one word by replaying the learned
     * merges in order (standard BPE inference). Corpus-scale contract:
     * encode the VOCAB (unique words), never the token stream — the
@@ -129,16 +68,16 @@ object Bpe {
     * incremental-index trainer ([[learnLocalIndexed]]) — the
     * architecture every production tokenizer trainer uses (word counts
     * in memory, never the corpus). A V-merge vocabulary therefore costs
-    * ZERO Spark jobs beyond the dict build, where [[learn]]'s
-    * one-collected-argmax-per-step contract is V sequential Spark jobs —
-    * fine at the declared 8 steps, a driver bottleneck by construction
-    * at a real 32k–100k-merge vocab.
+    * ZERO Spark jobs beyond the dict build, where a per-step distributed
+    * loop (one collected argmax per merge) would cost V sequential Spark
+    * jobs — a driver bottleneck by construction at a real
+    * 32k–100k-merge vocab.
     *
     * Guard + sample-then-train: within `dictCap` (default the
     * [[graft.queries.VocabGuard.MaxBroadcastEntries]] 10M-entry
     * model-size bound, ~100–200 MB of strings+longs) the WHOLE dict
-    * collects and the result is bit-identical to [[learn]] /
-    * [[learnLocal]] (BpeSpec pins all three pairwise). Beyond the cap,
+    * collects and the result is bit-identical to [[learnLocal]]
+    * (BpeSpec pins the parity). Beyond the cap,
     * training proceeds on the top-`dictCap` words by (freq DESC, word
     * ASC) — the deterministic frequency-ranked sample; truncating the
     * rarest tail is the standard sample-then-train recipe (the dropped
@@ -209,7 +148,8 @@ object Bpe {
       words.toSeq.map { case (w, f) => (w.map(_.toString): Seq[String], f) })
     val counts = mutable.Map.empty[(String, String), Long]
     val occurs = mutable.Map.empty[(String, String), mutable.Set[Int]]
-    // ordered view of counts: head = the argmax under the learn tie-break
+    // ordered view of counts: head = the argmax under the (freq DESC,
+    // left ASC, right ASC) tie-break
     implicit val ord: Ordering[(Long, String, String)] =
       Ordering.Tuple3(Ordering.Long, Ordering.String, Ordering.String)
     val byFreq = mutable.TreeSet.empty[(Long, String, String)]
@@ -254,7 +194,7 @@ object Bpe {
   }
 
   /** Plain single-threaded reference implementation over an in-memory
-    * word-freq map — the parity oracle for [[learn]] and
+    * word-freq map — the parity oracle for [[learnScalable]] and
     * [[learnLocalIndexed]] (BpeSpec).
     */
   private[graft] def learnLocal(words: Map[String, Long], steps: Int): Seq[Merge] = {

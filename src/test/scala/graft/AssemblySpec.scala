@@ -158,7 +158,7 @@ class AssemblySpec extends SparkSpec {
   test("doc_pack_emit_ids bit-matches a full local tokenizer+pack replay") {
     import graft.text.Bpe
     // end-to-end local oracle: driver-side normalize/tokenize, learnLocal
-    // (≡ the distributed learn by BpeSpec), lexicographic subword ids,
+    // (≡ learnScalable by BpeSpec), lexicographic subword ids,
     // greedy re-pack — every (source, shard, bin) row must match
     // (n_docs, n_ids, md5 of the id stream) bit-for-bit
     val docs = Tables.table(spark, sfDir, "documents")

@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.text.{Bpe, TextFunctions}
 
-/** Parity + determinism for the distributed BPE merge learner: the
-  * cluster algorithm (vocab-dict iterations, argmax-only driver traffic)
-  * must produce the EXACT merge table a plain single-threaded reference
-  * implementation produces on the same word-frequency dict.
+/** Parity + determinism for the BPE merge learner: the production path
+  * (one distributed dict pass, guarded collect, incremental in-memory
+  * merge loop) must produce the EXACT merge table a plain single-threaded
+  * reference implementation produces on the same word-frequency dict.
   */
 class BpeSpec extends SparkSpec {
 
@@ -17,22 +17,25 @@ class BpeSpec extends SparkSpec {
     .filter(length(col("word")) > 0)
     .groupBy("word").agg(count(lit(1)).as("freq"))
 
-  test("distributed learner matches the local reference bit-for-bit") {
+  test("learnScalable matches the local reference bit-for-bit") {
+    // the declared query's path (guarded collect + incremental in-memory
+    // loop) must be indistinguishable from the full-recount reference
+    // within the cap
     val dict = wordDict
     val local = Bpe.learnLocal(
       dict.collect().map(r => r.getString(0) -> r.getLong(1)).toMap, steps = 8)
-    val dist = Bpe.learn(spark, dict, steps = 8)
-    assert(dist === local)
-    assert(dist.size === 8)
+    val learned = Bpe.learnScalable(spark, dict, steps = 8)
+    assert(learned === local)
+    assert(learned.size === 8)
     // merge table is internally consistent: merged = left + right,
     // frequencies non-increasing is NOT guaranteed by BPE (a merge can
     // create a new frequent pair), but every freq is positive
-    dist.foreach { m => assert(m.merged === m.left + m.right && m.freq > 0) }
+    learned.foreach { m => assert(m.merged === m.left + m.right && m.freq > 0) }
   }
 
   test("learner is deterministic across runs") {
-    val a = Bpe.learn(spark, wordDict, steps = 4)
-    val b = Bpe.learn(spark, wordDict, steps = 4)
+    val a = Bpe.learnScalable(spark, wordDict, steps = 4)
+    val b = Bpe.learnScalable(spark, wordDict, steps = 4)
     assert(a === b)
   }
 
@@ -41,16 +44,6 @@ class BpeSpec extends SparkSpec {
     assert(Bpe.mergeOnce(Seq("a", "b", "a", "b"), "a", "b") === Seq("ab", "ab"))
     assert(Bpe.mergeOnce(Seq("x"), "a", "b") === Seq("x"))
     assert(Bpe.mergeOnce(Nil, "a", "b") === Nil)
-  }
-
-  test("learnScalable matches the distributed learner bit-for-bit") {
-    // the r16 scalable path (guarded collect + incremental in-memory
-    // loop) must be indistinguishable from the per-step distributed
-    // loop within the cap — the declared query swapped to it relying
-    // on exactly this
-    val dict = wordDict
-    assert(Bpe.learnScalable(spark, dict, steps = 8) ===
-      Bpe.learn(spark, dict, steps = 8))
   }
 
   test("learnLocalIndexed matches learnLocal on adversarial overlaps") {
@@ -107,7 +100,7 @@ class BpeSpec extends SparkSpec {
     // two pairs with equal weight: ("ab" vs "ba" from "aba" x1) — the
     // lexicographically smaller left wins
     val dict = spark.createDataFrame(Seq(("aba", 1L))).toDF("word", "freq")
-    val m = Bpe.learn(spark, dict, steps = 1)
+    val m = Bpe.learnScalable(spark, dict, steps = 1)
     assert(m.head.left === "a" && m.head.right === "b")
     assert(m === Bpe.learnLocal(Map("aba" -> 1L), steps = 1))
   }
@@ -129,7 +122,7 @@ class BpeSpec extends SparkSpec {
     assert(Bpe.encodeWord("abcab", merges.reverse) === Seq("abc", "ab"))
     // concat invariant on learned merges over the real dict
     val dict = wordDict
-    val learned = Bpe.learn(spark, dict, steps = 8)
+    val learned = Bpe.learnScalable(spark, dict, steps = 8)
     dict.collect().take(50).foreach { r =>
       val w = r.getString(0)
       assert(Bpe.encodeWord(w, learned).mkString === w)

@@ -1,8 +1,16 @@
 #!/usr/bin/env bash
-# Dev-only full validation: clean build, tests, oracle cross-check at two
-# scales, flagship smoke, bench and the benchmark's smoke run.
+# Dev-only full validation: every main named in README, clean build, tests,
+# oracle cross-check at two scales, flagship smoke, bench and the
+# benchmark's smoke run.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+# every main under src/main is named in README.md: a main that no
+# documented workflow runs is deleted, not kept
+for m in $(awk '/^object [A-Za-z0-9_]+/ {o = $2} /def main\(/ {print o}' \
+    $(grep -rl 'def main(' src/main/scala)); do
+  grep -qw "$m" README.md || { echo "main $m is not named in README.md" >&2; exit 1; }
+done
 
 sbt -batch clean test
 
