@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.text.{Bpe, TextFunctions}
@@ -7,7 +8,8 @@ import graft.text.{Bpe, TextFunctions}
 /** Parity + determinism for the BPE merge learner: the production path
   * (one distributed dict pass, guarded collect, incremental in-memory
   * merge loop) must produce the EXACT merge table a plain single-threaded
-  * reference implementation produces on the same word-frequency dict.
+  * reference implementation produces on the same word-frequency dict,
+  * and the exact table a per-step Spark SQL loop produces.
   */
 class BpeSpec extends SparkSpec {
 
@@ -17,10 +19,49 @@ class BpeSpec extends SparkSpec {
     .filter(length(col("word")) > 0)
     .groupBy("word").agg(count(lit(1)).as("freq"))
 
-  test("learnScalable matches the local reference bit-for-bit") {
-    // the declared query's path (guarded collect + incremental in-memory
-    // loop) must be indistinguishable from the full-recount reference
-    // within the cap
+  /** Per-step distributed learner, kept here only as a second reference:
+    * each step counts adjacent pairs over the symbol dict in Spark SQL and
+    * collects the single (freq DESC, left, right) argmax row, so Spark's
+    * grouping and string ordering decide every merge.
+    */
+  private def learnPerStep(words: DataFrame, steps: Int): Seq[Bpe.Merge] = {
+    val mergeUdf = udf((syms: Seq[String], l: String, r: String) => Bpe.mergeOnce(syms, l, r))
+    var dict = words.select(
+      expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))").as("syms"),
+      col("freq")).cache()
+    val merges = scala.collection.mutable.ArrayBuffer.empty[Bpe.Merge]
+    try {
+      var step = 1
+      var done = false
+      while (step <= steps && !done) {
+        val top = dict
+          .select(col("freq"), explode(expr(
+            """transform(slice(syms, 1, size(syms) - 1),
+                 (x, i) -> struct(x AS l, element_at(syms, i + 2) AS r))""")).as("p"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum("freq").as("cnt"))
+          .orderBy(col("cnt").desc, col("l"), col("r"))
+          .limit(1)
+          .collect()
+        if (top.isEmpty) done = true
+        else {
+          val Row(l: String, r: String, cnt: Long) = top(0)
+          merges += Bpe.Merge(step, l, r, l + r, cnt)
+          val next = dict.withColumn("syms", mergeUdf(col("syms"), lit(l), lit(r))).cache()
+          next.count() // materialize before dropping the parent lineage
+          dict.unpersist()
+          dict = next
+          step += 1
+        }
+      }
+      merges.toSeq
+    } finally dict.unpersist()
+  }
+
+  test("distributed learner matches the local reference bit-for-bit") {
+    // the declared query's learner (distributed dict pass, guarded
+    // collect, incremental in-memory loop) must be indistinguishable
+    // from the full-recount reference within the cap
     val dict = wordDict
     val local = Bpe.learnLocal(
       dict.collect().map(r => r.getString(0) -> r.getLong(1)).toMap, steps = 8)
@@ -44,6 +85,13 @@ class BpeSpec extends SparkSpec {
     assert(Bpe.mergeOnce(Seq("a", "b", "a", "b"), "a", "b") === Seq("ab", "ab"))
     assert(Bpe.mergeOnce(Seq("x"), "a", "b") === Seq("x"))
     assert(Bpe.mergeOnce(Nil, "a", "b") === Nil)
+  }
+
+  test("learnScalable matches the distributed learner bit-for-bit") {
+    // the in-memory trainer against the per-step Spark SQL loop: same
+    // pair counts, same tie-break under Spark's string ordering
+    val dict = wordDict
+    assert(Bpe.learnScalable(spark, dict, steps = 8) === learnPerStep(dict, steps = 8))
   }
 
   test("learnLocalIndexed matches learnLocal on adversarial overlaps") {
