@@ -129,10 +129,6 @@ object Bench {
         s""""n_queries":${results.size},""" +
         s""""canary":{"query":"rel_q6","start_sec":$canaryStart,""" +
         s""""mid_sec":$canaryMid,"end_sec":$canaryEnd},"compact":true}""")
-    // belt-and-braces: the complete record as a file artifact, immune to
-    // any stdout truncation (committed per round alongside BASELINE.md)
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_local.json"),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
   }
 }

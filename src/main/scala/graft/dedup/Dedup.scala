@@ -22,9 +22,14 @@ import graft.text.TextFunctions
   *    signatures reduced in ONE aggregation over the exploded shingles
   *    (k `min` aggregates — no k-fold data blowup), then pairs that share
   *    a band bucket. Candidate generation cost is linear in docs × bands.
-  *  - [[simHash]]          — 32-bit SimHash per doc: token-hash bit votes,
-  *    one aggregation, constant state per doc; near-dup = small Hamming
-  *    distance ([[simHashPairs]]).
+  *  - [[simHash]] / [[simHash64]] — 32- or 64-bit SimHash per doc:
+  *    token-hash bit votes, one aggregation, constant state per doc;
+  *    near-dup = small Hamming distance ([[simHashPairs]]).
+  *  - the banded Hamming near-dup join (`chunkPairKeys`,
+  *    `bandedCandidates`, `bandedPairs`, [[bandCapacity]]) — one
+  *    chunk-pair-banded self-join with a counted capacity guard, serving
+  *    both SimHash widths and the media fingerprints of
+  *    [[graft.multimodal.Multimodal.phashPairs]].
   *  - [[embeddingPairs]]   — cosine near-dup over embedding vectors
   *    (brute-force verify form; candidate pruning at scale comes from
   *    [[graft.similarity.Similarity]]'s IVF routing).
@@ -60,26 +65,18 @@ object Dedup {
 
   /** Exact n-gram Jaccard similarity for every pair above `minJaccard`.
     *
-    * The shingle index backs three subtrees (sizes + both join sides);
-    * `cacheIndex = true` pins it MEMORY_AND_DISK (measured 6× faster than
-    * recomputing per subtree) — but a returned-lazy frame has no safe
-    * unpersist point, so each cached call leaves one pinned plan behind.
-    * The default is therefore the leak-free recompute path; callers that
-    * want the cached speed without the leak should use
-    * [[withShingleIndex]] (scoped pin, released on exit) or
+    * The shingle index backs three subtrees (sizes + both join sides) and
+    * is recomputed per subtree here: a returned-lazy frame has no safe
+    * unpersist point for a cache pin. Callers that want the index built
+    * once use [[withShingleIndex]] (scoped pin, released on exit) or
     * [[writeShingleIndex]] (one-time materialization — the right shape at
     * 100 TB anyway).
     */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, minJaccard: Double, cacheIndex: Boolean = false,
-      maxShingleDf: Int = Int.MaxValue): DataFrame = {
-    val idx0 = shingleIndex(docs, idCol, textCol, n)
-    val idx =
-      if (cacheIndex)
-        idx0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else idx0
-    jaccardPairsFromIndex(idx, minJaccard, maxShingleDf)
-  }
+      n: Int, minJaccard: Double,
+      maxShingleDf: Int = Int.MaxValue): DataFrame =
+    jaccardPairsFromIndex(shingleIndex(docs, idCol, textCol, n), minJaccard,
+      maxShingleDf)
 
   /** Loan-pattern shingle index: pins the index for the duration of `f`
     * and releases the pin on exit — the non-leaking way to run several
@@ -344,251 +341,208 @@ object Dedup {
         (agree.cast("double") / k).as("jaccard_est"))
   }
 
-  /** 32-bit frequency-weighted SimHash per document.
-    *
-    * ONE aggregation with 32 integer `sum` columns (one per bit), not an
-    * explode of tokens × 32 bit-positions: the explode shape pushed a 32×
-    * row blowup through two shuffles; here the shuffle carries 32 long
-    * partials per doc (map-side combine) and the bit votes stay inside
-    * whole-stage codegen. Integer sums are order-independent, so the
-    * result is bit-identical to the per-bit formulation.
+  /** 32-bit frequency-weighted SimHash per document — `simHashSigs`
+    * over the first 32-bit half of each token's md5.
     */
-  def simHash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+  def simHash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    simHashSigs(docs, idCol, textCol, bits = 32)
+
+  /** 64-bit frequency-weighted SimHash per document — `simHashSigs`
+    * over both 32-bit halves of each token's md5, so its low 32 bits
+    * equal [[simHash]]'s signature (spec-pinned). The wider signature
+    * is what web-scale banding needs: at h = 2 the band key space is
+    * 2^32 instead of 2^16 ([[bandCapacity]]).
+    */
+  def simHash64(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    simHashSigs(docs, idCol, textCol, bits = 64)
+
+  /** `bits`-wide SimHash `(doc_id, simhash)`: each token's md5 is read as
+    * `bits / 32` 32-bit halves, and bit b of the signature is set when
+    * the tokens whose hash has bit b set outvote those that do not.
+    *
+    * ONE aggregation with `bits` integer `sum` columns, not an explode of
+    * tokens × bit positions: the shuffle carries `bits` long partials per
+    * doc (map-side combine) and the votes stay inside whole-stage
+    * codegen. Integer sums are order-independent, so the result is
+    * bit-identical to the per-bit formulation. The bits assemble with
+    * bitwiseOR (disjoint powers of two; bit 63 would overflow an ANSI
+    * sum).
+    */
+  private def simHashSigs(docs: DataFrame, idCol: String, textCol: String,
+      bits: Int): DataFrame = {
+    require(bits == 32 || bits == 64, "simhash width is 32 or 64")
+    val halves = (0 until bits / 32).map(k =>
+      conv(substring(col("m"), 1 + 8 * k, 8), 16, 10).cast("long").as(s"h$k"))
     val hashed = docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol).as("doc_id"),
         explode(TextFunctions.tokens(TextFunctions.normalize(col(textCol)))).as("tok"))
-      .select(col("doc_id"),
-        conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long").as("h"))
-    val votes = (0 until 32).map(b =>
-      sum(when(shiftright(col("h"), b) % 2 === 1, 1).otherwise(-1)).as(s"v$b"))
-    hashed.groupBy("doc_id")
-      .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"),
-        (0 until 32).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
-  }
-
-  /** 64-bit frequency-weighted SimHash — [[simHash]] carried to the
-    * signature width web-scale banding needs: the ≥2-shared-chunks
-    * chunk-pair key space is 2^(2·bits/c), so a 32-bit signature at
-    * h = 2 caps the banded self-join at ~1M docs (16 × 2^16 mean-
-    * occupancy capacity) while 64 bits lift the same bound to
-    * 16 × 2^32 ≈ 68 BILLION — the difference between a fixture and a
-    * web corpus. Same one-aggregation shape (64 integer vote sums, map-
-    * side combined, order-independent); the token hash takes BOTH 32-bit
-    * halves of the same md5 the 32-bit path reads its first half from,
-    * so the low 32 bits of this signature EQUAL [[simHash]]'s output
-    * (spec-pinned) and the two operators can never drift. The bits
-    * assemble with bitwiseOR (disjoint powers of two — bit 63 would
-    * overflow an ANSI sum).
-    */
-  def simHash64(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val hashed = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("doc_id"),
-        explode(TextFunctions.tokens(TextFunctions.normalize(col(textCol))))
-          .as("tok"))
       .select(col("doc_id"), md5(col("tok")).as("m"))
-      .select(col("doc_id"),
-        conv(substring(col("m"), 1, 8), 16, 10).cast("long").as("hlo"),
-        conv(substring(col("m"), 9, 8), 16, 10).cast("long").as("hhi"))
-    val votes = (0 until 64).map { b =>
-      val h = if (b < 32) col("hlo") else col("hhi")
-      sum(when(shiftright(h, b % 32) % 2 === 1, 1).otherwise(-1)).as(s"v$b")
-    }
+      .select(col("doc_id") +: halves: _*)
+    val votes = (0 until bits).map(b =>
+      sum(when(shiftright(col(s"h${b / 32}"), b % 32) % 2 === 1, 1).otherwise(-1))
+        .as(s"v$b"))
     hashed.groupBy("doc_id")
       .agg(votes.head, votes.tail: _*)
       .select(col("doc_id"),
-        (0 until 64).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
+        (0 until bits).map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
           .reduce(_ bitwiseOR _).as("simhash"))
   }
 
-  /** The C(c,2) chunk-pair band keys of a `bits`-wide `simhash` column —
-    * the ≥2-SHARED-CHUNKS combinatorial banding (the r14 move, shared
-    * with the 64-bit perceptual-hash path): c = maxHamming + 2 chunks,
-    * band key = one of the C(c,2) CHUNK PAIRS. A pair within the bound
-    * disturbs ≤ maxHamming chunks, so ≥ 2 survive intact and at least
-    * one chunk-pair key matches — same guaranteed recall as the classic
-    * one-shared split, with the per-band key space SQUARED: at the
-    * standing 32-bit h = 2 that is 4 × 8-bit chunks → 2^16 keys instead
-    * of the 3 × ~11-bit chunks (2^10.7) the r13 decade probe measured
-    * saturating; at 64-bit h = 2 it is 2^32. Chunk boundaries are
-    * k·bits/c, so all bits are covered at any c. The key bit-packs into
-    * ONE long (pairIdx << 44 | chunk_i << 22 | chunk_j — chunk width
-    * ≤ 22 enforced, pairIdx < 33² < 2^11, total < 2^55) — a single long
-    * shuffles cheaper than a 4-column key. `shiftrightunsigned` so a
-    * set 64-bit sign bit cannot smear into the extracted chunk.
+  /** Mean band-bucket occupancy above which the banded self-join is
+    * declared saturated: candidates ≈ occupancy × corpus, no longer
+    * near-linear.
     */
-  private def chunkPairKeys(c: Int, bits: Int): IndexedSeq[Column] = {
-    require(bits == 32 || bits == 64, "simhash width is 32 or 64")
-    require(bits / c + 1 <= 22,
-      s"chunk width ${bits / c + 1} exceeds the 22-bit key pack at c=$c")
-    def chunk(k: Int): Column = {
-      val lo = k * bits / c
-      val width = (k + 1) * bits / c - lo
-      shiftrightunsigned(col("simhash"), lo).bitwiseAND(lit((1L << width) - 1))
+  private val MaxBandOccupancy = 16L
+
+  /** The banded Hamming near-dup join, shared by [[simHashPairs]],
+    * [[simHashPairs64]] and the media fingerprints'
+    * [[graft.multimodal.Multimodal.phashPairs]]: the chunk-pair band keys
+    * of a `bits`-wide hash column.
+    *
+    * Layout: c = maxHamming + 2 chunks of w = bits / c bits; chunk k
+    * covers bits [k·w, (k+1)·w), and the bits % c top bits lie outside
+    * every chunk. A pair within maxHamming disturbs at most maxHamming
+    * chunks, so ≥ 2 chunks match exactly and the pair shares at least one
+    * of the C(c,2) CHUNK-PAIR keys: guaranteed total recall, with a band
+    * key space of 2^(2w) — the square of the classic one-shared-chunk
+    * split's.
+    *
+    * Key packing, injective at every accepted bound: for c = 2 there is
+    * one band and the key is chunk_0 << w | chunk_1 (w = 32 fills a
+    * 64-bit hash's long exactly). For c ≥ 3, w ≤ 21, so the band index
+    * i·c + j < c² ≤ 2^10 fits above the 2w ≤ 42 chunk bits:
+    * (i·c + j) << 2w | chunk_i << w | chunk_j. One long shuffles cheaper
+    * than a multi-column key; `shiftrightunsigned` keeps a set sign bit
+    * out of the extracted chunk.
+    *
+    * Capacity: the counted guard in [[bandedPairs]] refuses a corpus of
+    * more than [[bandCapacity]] = 16 · 2^(2w) hashes, where mean bucket
+    * occupancy passes [[MaxBandOccupancy]].
+    */
+  private def chunkPairKeys(hash: Column, maxHamming: Int, bits: Int): IndexedSeq[Column] = {
+    require(bits == 32 || bits == 64, "hash width is 32 or 64")
+    require(maxHamming >= 0 && maxHamming < 31, "maxHamming in [0, 31)")
+    val c = maxHamming + 2
+    val w = bits / c
+    def chunk(k: Int): Column =
+      shiftrightunsigned(hash, k * w).bitwiseAND(lit((1L << w) - 1))
+    for { i <- 0 until c; j <- (i + 1) until c } yield {
+      val pair = shiftleft(chunk(i), w).bitwiseOR(chunk(j))
+      if (c == 2) pair else lit((i * c + j).toLong << (2 * w)).bitwiseOR(pair)
     }
-    for { i <- 0 until c; j <- (i + 1) until c } yield
-      shiftleft(lit((i * c + j).toLong), 44)
-        .bitwiseOR(shiftleft(chunk(i), 22)).bitwiseOR(chunk(j))
   }
+
+  /** `(id, hash, bk)`: every row exploded to its chunk-pair band keys. */
+  private def bandRows(sigs: DataFrame, idCol: String, hashCol: String,
+      maxHamming: Int, bits: Int): DataFrame =
+    sigs.select(col(idCol), col(hashCol),
+      explode(array(chunkPairKeys(col(hashCol), maxHamming, bits): _*)).as("bk"))
 
   /** The banded (doc_id, simhash, bk) rows behind [[simHashPairs]],
     * exposed so skew can be inspected/tested without re-deriving the
     * chunk arithmetic.
     */
   private[graft] def simHashBands(docs: DataFrame, idCol: String,
-      textCol: String, maxHamming: Int, bits: Int = 32): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 31,
-      "need 0 <= maxHamming < 31 for >=2-shared chunk-pair bands")
-    val sigs =
-      if (bits == 64) simHash64(docs, idCol, textCol)
-      else simHash(docs, idCol, textCol)
-    bandSigs(sigs, maxHamming, bits)
-  }
+      textCol: String, maxHamming: Int, bits: Int = 32): DataFrame =
+    bandRows(simHashSigs(docs, idCol, textCol, bits), "doc_id", "simhash",
+      maxHamming, bits)
 
-  private def bandSigs(sigs: DataFrame, maxHamming: Int, bits: Int): DataFrame =
-    sigs.select(col("doc_id"), col("simhash"),
-      explode(array(chunkPairKeys(maxHamming + 2, bits): _*)).as("bk"))
-
-  /** SimHash near-dup pairs with Hamming distance ≤ `maxHamming`, via
-    * ≥2-shared-chunks pigeonhole banding ([[simHashBands]]) — NOT an
-    * all-pairs join: the equi-join on the chunk-pair band key has
-    * **guaranteed total recall** (exact, not approximate — see the
-    * banding scaladoc), survivors are Hamming-verified with one
-    * XOR+popcount, and the ≤-bound filter runs BEFORE the pair-level
-    * dedup so the distinct shuffles only true pairs. At 100 TB the
-    * shuffle carries C(maxHamming+2, 2) longs per doc.
+  /** The banded self-join's raw candidates `(a_id, b_id, hamming)` over
+    * the [[chunkPairKeys]] bands: one equi-join on the band key, never
+    * row × row, each candidate's exact distance by one XOR + popcount
+    * (INT). A pair that shares several bands appears once per band.
     *
-    * Skew: a chunk-pair key shared by d docs concentrates d²/2 candidate
-    * comparisons on one reducer (boilerplate/templated corpora make hot
-    * keys real). AQE's skew-join split is the first line of defense;
-    * `saltBuckets = S > 1` is the guaranteed bound: the left side salts
-    * each row into one of S sub-keys by doc-id hash, the right side
-    * replicates each row to all S sub-keys, so every unordered pair still
-    * meets exactly once (at the left doc's salt) while each reducer does
-    * ~1/S of the hot key's comparisons. Cost: S× replication of the
-    * (doc_id, simhash, bk) band rows — cheap, they are three longs wide.
-    *
-    * Capacity: the 32-bit key space caps this path at ~16 · 2^(2·⌊32/c⌋)
-    * docs (≈ 1 M at h = 2); a counted probe REFUSES loudly past that —
-    * the web-scale configuration is [[simHashPairs64]].
+    * Skew: a band key shared by d rows puts d²/2 comparisons on one
+    * reducer. AQE's skew-join split is the first defense; `saltBuckets =
+    * S > 1` is the guaranteed bound: the left side salts each row into
+    * one of S sub-keys by id hash, the right side replicates each row to
+    * all S, so every unordered pair still meets exactly once (at the left
+    * row's salt) while each reducer does ~1/S of the hot key's work.
     */
-  def simHashPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, saltBuckets: Int = 1): DataFrame =
-    simHashRawCandidates(docs, idCol, textCol, maxHamming, saltBuckets)
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-
-  /** The banding join's DISTINCT candidates with their exact hamming,
-    * before the ≤ maxHamming verdict — the probe/eval surface (what does
-    * the banding scheme COST in candidate volume at this corpus?); the
-    * serving path is [[simHashPairs]], which verifies before the
-    * pair-level distinct.
-    */
-  def simHashCandidates(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, saltBuckets: Int = 1): DataFrame =
-    simHashRawCandidates(docs, idCol, textCol, maxHamming, saltBuckets)
-      .distinct()
-
-  private def simHashRawCandidates(docs: DataFrame, idCol: String,
-      textCol: String, maxHamming: Int, saltBuckets: Int): DataFrame = {
+  private[graft] def bandedCandidates(sigs: DataFrame, idCol: String,
+      hashCol: String, maxHamming: Int, bits: Int,
+      saltBuckets: Int = 1): DataFrame = {
     require(saltBuckets >= 1, "saltBuckets must be >= 1")
-    // Counted capacity guard (the simHashPairs64/phashPairs convention,
-    // ported here in r15 — this was the one banded-pairs member that
-    // could still go quadratic SILENTLY): the 32-bit chunk-pair key
-    // space is 2^(2·⌊32/c⌋) values (2^16 at h = 2 → capacity
-    // 16 · 2^16 ≈ 1 M docs at mean band occupancy
-    // [[graft.multimodal.Multimodal.MaxBandOccupancy]]); past it the
-    // equi-join's collision term dominates and the job must REFUSE with
-    // the remediation dials, not degrade. The signature frame is lazily
-    // checkpointed so the probe and both join sides share ONE
-    // materialization of the 64-vote aggregation.
-    val sigs = simHash(docs, idCol, textCol).localCheckpoint(eager = false)
-    val cap = simHashCapacity(maxHamming, bits = 32)
-    val n = sigs.limit((cap min (Int.MaxValue - 1).toLong).toInt + 1).count()
-    if (n > cap) throw new IllegalStateException(
-      s"simHashPairs: $n signatures exceed the banding capacity $cap at " +
-        s"maxHamming=$maxHamming (mean band-bucket occupancy > " +
-        s"${graft.multimodal.Multimodal.MaxBandOccupancy} — the candidate " +
-        "join would go quadratic). Lower the hamming bound (more key bits " +
-        "per band), switch to simHashPairs64 (2^32-value bands at h=2, " +
-        "capacity ~68 billion docs), or shard the corpus.")
-    val banded = bandSigs(sigs, maxHamming, bits = 32)
+    val banded = bandRows(sigs, idCol, hashCol, maxHamming, bits)
     val (aSide, bSide, keys) =
       if (saltBuckets == 1) (banded, banded, Seq("bk"))
       else (
         banded.withColumn("salt",
-          pmod(xxhash64(col("doc_id")), lit(saltBuckets)).cast("int")),
+          pmod(xxhash64(col(idCol)), lit(saltBuckets)).cast("int")),
         banded.withColumn("salt",
           explode(sequence(lit(0), lit(saltBuckets - 1)))),
         Seq("bk", "salt"))
     aSide.as("a").join(bSide.as("b"), keys)
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        bit_count(expr("a.simhash ^ b.simhash")).as("hamming"))
+      .filter(col(s"a.$idCol") < col(s"b.$idCol"))
+      .select(col(s"a.$idCol").as("a_id"), col(s"b.$idCol").as("b_id"),
+        bit_count(col(s"a.$hashCol").bitwiseXOR(col(s"b.$hashCol"))).as("hamming"))
   }
 
-  /** 64-bit SimHash near-dup pairs with the LOUD capacity guard — the
-    * web-scale serving configuration of the banded family: chunk-pair
-    * keys over a [[simHash64]] signature give a 2^(2·64/c)-value key
-    * space (2^32 at h = 2 vs the 32-bit path's 2^16 — theoretical
-    * capacity 16 × 2^32 ≈ 68 BILLION docs at mean band occupancy
-    * [[graft.multimodal.Multimodal.MaxBandOccupancy]]; the counted
-    * probe saturates at ~2^31, where occupancy over 2^32 keys is still
-    * < 1 — the same int-limit convention as the phash guard), and like
-    * [[graft.multimodal.Multimodal.phashPairs]] the corpus is counted
-    * against that capacity via one `limit(cap+1)` probe over the lazily
-    * checkpointed signature frame (which the self-join then reuses, so
-    * the 64-vote aggregation runs ONCE, not once per join side) and the
-    * job fails with the remediation dials spelled out instead of
-    * silently going quadratic. Verify-before-distinct: the ≤-bound
-    * filter runs before the pair-level dedup so the distinct shuffles
-    * only true pairs. Same salt dial as [[simHashPairs]].
+  /** Verified banded near-dup pairs `(a_id, b_id, hamming)` with hamming ≤
+    * `maxHamming`, behind the counted capacity guard: the hash frame is
+    * lazily checkpointed, one `limit(cap + 1)` probe counts it against
+    * [[bandCapacity]], and a breach throws with the remediation dials
+    * (`remedy` names the caller's own) instead of silently running a
+    * quadratic join. The self-join then reuses the checkpoint, so the
+    * hash frame is computed once. The ≤ bound filters BEFORE the
+    * pair-level distinct, so the dedup shuffle carries only true pairs.
+    * NOTE the probe is an eager Spark action at construction time.
     */
-  def simHashPairs64(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, saltBuckets: Int = 1): DataFrame = {
-    require(saltBuckets >= 1, "saltBuckets must be >= 1")
-    val sigs = simHash64(docs, idCol, textCol).localCheckpoint(eager = false)
-    val cap = simHashCapacity(maxHamming, bits = 64)
-    val n = sigs.limit((cap min (Int.MaxValue - 1).toLong).toInt + 1).count()
+  private[graft] def bandedPairs(sigs: DataFrame, idCol: String,
+      hashCol: String, maxHamming: Int, bits: Int, saltBuckets: Int,
+      op: String, remedy: String): DataFrame = {
+    val ckpt = sigs.localCheckpoint(eager = false)
+    val cap = bandCapacity(maxHamming, bits)
+    val n = ckpt.limit(cap.toInt + 1).count()
     if (n > cap) throw new IllegalStateException(
-      s"simHashPairs64: $n signatures exceed the banding capacity $cap at " +
+      s"$op: $n hashes exceed the banding capacity $cap at " +
         s"maxHamming=$maxHamming (mean band-bucket occupancy > " +
-        s"${graft.multimodal.Multimodal.MaxBandOccupancy} — the candidate " +
-        "join would go quadratic). Lower the hamming bound (more key bits " +
-        "per band) or shard the corpus.")
-    val banded = bandSigs(sigs, maxHamming, bits = 64)
-    val (aSide, bSide, keys) =
-      if (saltBuckets == 1) (banded, banded, Seq("bk"))
-      else (
-        banded.withColumn("salt",
-          pmod(xxhash64(col("doc_id")), lit(saltBuckets)).cast("int")),
-        banded.withColumn("salt",
-          explode(sequence(lit(0), lit(saltBuckets - 1)))),
-        Seq("bk", "salt"))
-    aSide.as("a").join(bSide.as("b"), keys)
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        bit_count(expr("a.simhash ^ b.simhash")).as("hamming"))
+        s"$MaxBandOccupancy — the candidate join would go quadratic). " +
+        s"Lower the hamming bound (more key bits per band)$remedy.")
+    bandedCandidates(ckpt, idCol, hashCol, maxHamming, bits, saltBuckets)
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
 
-  /** [[simHashPairs64]]'s counted capacity: signature count beyond which
-    * mean band-bucket occupancy at `maxHamming` passes the shared
-    * [[graft.multimodal.Multimodal.MaxBandOccupancy]] bound. Key bits =
-    * 2 · floor(bits/c) (two chunks form the band key; the floor is the
-    * conservative narrow-chunk width).
+  /** Counted capacity of the banded join over `bits`-wide hashes at
+    * `maxHamming`: the hash count beyond which mean band-bucket occupancy
+    * passes [[MaxBandOccupancy]]. The band key is two chunks of
+    * bits / (maxHamming + 2) bits. Capped at an int-sized count so the
+    * guard's `limit(cap + 1)` stays valid — 2^31 hashes saturate nothing
+    * at 31+ key bits — and the key width is tested FIRST, because a Long
+    * shift is mod 64.
     */
-  def simHashCapacity(maxHamming: Int, bits: Int): Long = {
+  def bandCapacity(maxHamming: Int, bits: Int): Long = {
     require(maxHamming >= 0 && maxHamming < 31, "maxHamming in [0, 31)")
     val keyBits = 2 * (bits / (maxHamming + 2))
     if (keyBits >= 31) (Int.MaxValue - 1).toLong
-    else (graft.multimodal.Multimodal.MaxBandOccupancy << keyBits)
-      .min((Int.MaxValue - 1).toLong)
+    else (MaxBandOccupancy << keyBits) min (Int.MaxValue - 1).toLong
   }
+
+  /** SimHash near-dup pairs `(a_id, b_id, hamming INT)` with Hamming
+    * distance ≤ `maxHamming` over the 32-bit [[simHash]], through the
+    * banded join ([[bandedPairs]]): exact, not approximate. The 32-bit
+    * key space caps the corpus at ~1 M docs at h = 2; the web-scale
+    * configuration is [[simHashPairs64]]. `saltBuckets` is the skew dial
+    * of [[bandedCandidates]].
+    */
+  def simHashPairs(docs: DataFrame, idCol: String, textCol: String,
+      maxHamming: Int, saltBuckets: Int = 1): DataFrame =
+    bandedPairs(simHash(docs, idCol, textCol), "doc_id", "simhash",
+      maxHamming, bits = 32, saltBuckets, "simHashPairs",
+      ", switch to simHashPairs64 (2^32-value bands at h=2, capacity " +
+        "~68 billion docs), or shard the corpus")
+
+  /** [[simHashPairs]] over the 64-bit [[simHash64]]: 2^32-value bands at
+    * h = 2, so the guard's capacity saturates at its int-sized probe
+    * limit instead of ~1 M docs.
+    */
+  def simHashPairs64(docs: DataFrame, idCol: String, textCol: String,
+      maxHamming: Int, saltBuckets: Int = 1): DataFrame =
+    bandedPairs(simHash64(docs, idCol, textCol), "doc_id", "simhash",
+      maxHamming, bits = 64, saltBuckets, "simHashPairs64",
+      " or shard the corpus")
 
   /** Exact embedding-cosine near-dup pairs above `minCos`, as a
     * **packed blocked triangle join** — every pair is compared exactly

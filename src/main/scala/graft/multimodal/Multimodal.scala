@@ -10,6 +10,8 @@ import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, Audi
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Dedup
+
 /** Multimodal (image/audio/video) columns as opaque `binary` + typed
   * metadata — the Spark-side plumbing for a training-data pipeline.
   *
@@ -640,104 +642,28 @@ object Multimodal {
       .select(col("media_id"), dHashUdf(col("bytes")).as("phash"))
       .filter(col("phash").isNotNull)
 
-  /** Near-duplicate image pairs by perceptual hash: all (a, b) with
-    * hamming(phash_a, phash_b) ≤ `maxHamming`, found by ≥2-SHARED-CHUNKS
-    * combinatorial banding ([[phashCandidatesPairBand]]): the hash splits
-    * into c = maxHamming + 2 chunks, so a pair within the bound disturbs
-    * at most maxHamming chunks and must agree exactly on ≥ 2 — i.e. on at
-    * least one of the C(c,2) CHUNK PAIRS, which is the equi-join key.
-    * Guaranteed recall like the classic one-shared-chunk split, but the
-    * band key carries 2 chunks ≈ double the bits: at h = 6 the key space
-    * is 2^16 per band instead of the 2^9 that the r13 sf10 decade probe
-    * measured saturating at ~300k hashes (candidate join gone quadratic).
-    * `bit_count(xor)` verifies the exact distance on candidates only, and
-    * the ≤-bound filter runs BEFORE the pair-level distinct so the dedup
-    * shuffle carries only verified pairs, never the full candidate set.
-    * ONE shuffle keyed on (band, chunk-pair value), never image × image.
-    *
-    * Loud capacity guard (the `needsRebalance` convention): banding has a
-    * measurable saturation point — once mean bucket occupancy passes
-    * [[MaxBandOccupancy]] the candidate join is quadratic-in-practice, so
-    * rather than silently degrade, the corpus size is probed (one
-    * `limit(cap+1)` count over the lazily checkpointed hash frame, which
-    * the join then reuses) and the breach throws with the remediation
-    * dials (smaller bound / longer fingerprint) spelled out.
+  /** Near-duplicate media pairs by 64-bit perceptual hash (image dHash,
+    * audio and video contours, all in a `phash` column): every
+    * `(a_id, b_id, hamming BIGINT)` with hamming ≤ `maxHamming`, through
+    * the banded Hamming join and its counted capacity guard
+    * ([[graft.dedup.Dedup.bandCapacity]]) that SimHash uses too.
     */
   def phashPairs(hashes: DataFrame, maxHamming: Int): DataFrame = {
-    val ckpt = hashes.localCheckpoint(eager = false)
-    val cap = bandCapacity(maxHamming)
-    val n = ckpt.limit((cap + 1).toInt).count()
-    if (n > cap) throw new IllegalStateException(
-      s"phashPairs: $n fingerprints exceed the banding capacity $cap at " +
-        s"maxHamming=$maxHamming (mean band-bucket occupancy > " +
-        s"$MaxBandOccupancy — the candidate join would go quadratic). " +
-        "Lower the hamming bound (more key bits per band) or move to a " +
-        "longer fingerprint.")
-    phashCandidatesPairBand(ckpt, maxHamming, preFilter = true).distinct()
+    require(maxHamming >= 0 && maxHamming < 16, "maxHamming in [0, 16)")
+    Dedup.bandedPairs(hashes, "media_id", "phash", maxHamming, bits = 64,
+        saltBuckets = 1, "phashPairs", " or move to a longer fingerprint")
+      .withColumn("hamming", col("hamming").cast("long"))
   }
 
-  /** Mean band-bucket occupancy above which the banded self-join is
-    * declared saturated (candidates ≈ occupancy × corpus — no longer
-    * near-linear) and [[phashPairs]] fails loudly instead.
+  /** Every DISTINCT candidate of the banded join behind [[phashPairs]]
+    * with its exact hamming, before the ≤ `maxHamming` verdict — the
+    * `mm_band_eval` measuring path for the ≥2-shared-chunks scheme.
     */
-  val MaxBandOccupancy = 16L
-
-  /** [[phashPairs]]'s counted capacity: fingerprint count beyond which
-    * mean bucket occupancy at `maxHamming` passes [[MaxBandOccupancy]] —
-    * the key space per band is 2^(2·width) with width = 64/(maxHamming+2)
-    * chunk bits (two chunks form the band key).
-    */
-  def bandCapacity(maxHamming: Int): Long = {
+  def phashCandidatesPairBand(hashes: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 16, "maxHamming in [0, 16)")
-    val keyBits = 2 * (64 / (maxHamming + 2))
-    // cap the probe at an int-sized count so limit(cap+1) stays valid —
-    // 2^31 fingerprints saturate nothing at these key widths — and test
-    // keyBits FIRST: a Long shift is mod-64, so 16 << 64 (h = 0: two
-    // 32-bit chunks) would silently wrap to 16 instead of "unbounded"
-    if (keyBits >= 31) (Int.MaxValue - 1).toLong
-    else (MaxBandOccupancy << keyBits) min ((Int.MaxValue - 1).toLong)
-  }
-
-  /** The ≥2-shared-chunks candidate generator behind [[phashPairs]]:
-    * c = maxHamming + 2 chunks of width 64/c, band key = the packed long
-    * (bandIndex(i,j), chunk_i, chunk_j) over all C(c,2) chunk pairs.
-    * Pigeonhole recall proof: ≤ maxHamming differing bits land in at most
-    * maxHamming of the c chunks (leftover high bits, when 64 isn't a
-    * multiple of c, live OUTSIDE every chunk and can only leave more
-    * chunks intact), so ≥ 2 chunks match exactly and the pair shares at
-    * least one band key. MultimodalSpec pins this against brute force.
-    * With `preFilter` the ≤-bound verdict applies before the pair-level
-    * distinct (the serving path — the dedup shuffle carries only true
-    * pairs); without it, every distinct candidate survives with its exact
-    * hamming (the `mm_band_eval` measuring path).
-    */
-  def phashCandidatesPairBand(hashes: DataFrame, maxHamming: Int,
-      preFilter: Boolean = false): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 16, "maxHamming in [0, 16)")
-    val c = maxHamming + 2
-    val width = 64 / c
-    val mask = (1L << width) - 1
-    def chunk(k: Int) =
-      shiftrightunsigned(col("phash"), k * width).bitwiseAND(lit(mask))
-    // one LONG band key: (band index | chunk_i | chunk_j) bit-packed —
-    // band index < C(17,2) = 136 needs 8 bits, 2·width ≤ 42 bits at
-    // h = 1, so the key always fits; a single long shuffles cheaper
-    // than a 4-column struct key
-    val keys = (for { i <- 0 until c; j <- (i + 1) until c } yield
-      (lit(((i * c + j).toLong) << (2 * width)).bitwiseOR(
-        shiftleft(chunk(i), width)).bitwiseOR(chunk(j)))): IndexedSeq[Column]
-    val banded = hashes.select(col("media_id"), col("phash"),
-      explode(array(keys: _*)).as("bk"))
-    val a = banded.select(col("media_id").as("a_id"), col("phash").as("a_ph"),
-      col("bk"))
-    val b = banded.select(col("media_id").as("b_id"), col("phash").as("b_ph"),
-      col("bk"))
-    val cand = a.join(b, Seq("bk"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        bit_count(col("a_ph").bitwiseXOR(col("b_ph"))).cast("long").as("hamming"))
-    if (preFilter) cand.filter(col("hamming") <= maxHamming)
-    else cand.distinct()
+    Dedup.bandedCandidates(hashes, "media_id", "phash", maxHamming, bits = 64)
+      .distinct()
+      .withColumn("hamming", col("hamming").cast("long"))
   }
 
   /** The CLASSIC one-shared-chunk banding's CANDIDATES (distinct

@@ -111,7 +111,7 @@ object TextQueries extends QueryPack {
     * the entire index the ngram query just built. The memo is keyed (not
     * per-call), so repeated invocations of either query re-use ONE pin —
     * pinned-plan count is bounded by distinct fixtures touched, never by
-    * call count (the leak `Dedup.jaccardPairs(cacheIndex=true)` had).
+    * call count (a per-call pin would leak one plan per call).
     */
   private object SharedShingleIndex {
     private val memo =

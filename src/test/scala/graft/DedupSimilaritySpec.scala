@@ -142,28 +142,31 @@ class DedupSimilaritySpec extends SparkSpec {
     sh64.foreach { case (id, h) =>
       assert((h & 0xffffffffL) === sh32(id), s"doc $id low half drifted")
     }
-    val maxHam = 2
-    val ref = (for {
-      (a, ha) <- sh64; (b, hb) <- sh64 if a < b
-      ham = java.lang.Long.bitCount(ha ^ hb) if ham <= maxHam
-    } yield (a, b, ham)).toSet
-    assert(ref.nonEmpty, "fixture should contain 64-bit simhash-close docs")
-    val got = Dedup.simHashPairs64(docs, "doc_id", "text", maxHamming = maxHam)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(got === ref)
-    // the salt dial must not change the pair set (every unordered pair
-    // still meets exactly once, at the left doc's salt)
-    val salted = Dedup.simHashPairs64(docs, "doc_id", "text",
-        maxHamming = maxHam, saltBuckets = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(salted === ref)
+    // h = 0 is the single-band case: two 32-bit chunks form the key,
+    // so only equal signatures may pair
+    for (maxHam <- Seq(0, 2)) {
+      val ref = (for {
+        (a, ha) <- sh64; (b, hb) <- sh64 if a < b
+        ham = java.lang.Long.bitCount(ha ^ hb) if ham <= maxHam
+      } yield (a, b, ham)).toSet
+      assert(ref.nonEmpty, s"fixture should contain 64-bit simhash pairs within $maxHam")
+      val got = Dedup.simHashPairs64(docs, "doc_id", "text", maxHamming = maxHam)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(got === ref, s"maxHamming=$maxHam")
+      // the salt dial must not change the pair set (every unordered pair
+      // still meets exactly once, at the left doc's salt)
+      val salted = Dedup.simHashPairs64(docs, "doc_id", "text",
+          maxHamming = maxHam, saltBuckets = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(salted === ref, s"maxHamming=$maxHam salted")
+    }
   }
 
   test("simHashPairs64 fails loudly past its banding capacity") {
     // h = 29 → 31 chunks of 2 bits → 4-bit chunk-pair keys → capacity
     // 16 × 2^4 = 256 < the 500-doc fixture: the counted probe must throw
     // with the remediation dials, never run the quadratic join
-    assert(Dedup.simHashCapacity(29, bits = 64) === 256L)
+    assert(Dedup.bandCapacity(29, bits = 64) === 256L)
     val e = intercept[IllegalStateException] {
       Dedup.simHashPairs64(docs, "doc_id", "text", maxHamming = 29).count()
     }
@@ -176,17 +179,12 @@ class DedupSimilaritySpec extends SparkSpec {
     // chunks of 1 bit → 2-bit chunk-pair keys → capacity 16 × 2^2 = 64
     // < the 500-doc fixture: REFUSE with the remediation dials (incl.
     // the pointer to simHashPairs64), never run the quadratic join
-    assert(Dedup.simHashCapacity(29, bits = 32) === 64L)
+    assert(Dedup.bandCapacity(29, bits = 32) === 64L)
     val e = intercept[IllegalStateException] {
       Dedup.simHashPairs(docs, "doc_id", "text", maxHamming = 29).count()
     }
     assert(e.getMessage.contains("capacity"))
     assert(e.getMessage.contains("simHashPairs64"))
-    // candidates surface shares the guard (same raw-candidate path)
-    val e2 = intercept[IllegalStateException] {
-      Dedup.simHashCandidates(docs, "doc_id", "text", maxHamming = 29).count()
-    }
-    assert(e2.getMessage.contains("capacity"))
   }
 
   test("minhash lane agreement estimates Jaccard within sketch error on candidates") {
@@ -262,7 +260,7 @@ class DedupSimilaritySpec extends SparkSpec {
       val fromIdx = Dedup.jaccardPairsFromIndex(idx, minJaccard = 0.8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val direct = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3,
-          minJaccard = 0.8, cacheIndex = false)
+          minJaccard = 0.8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(fromIdx === direct)
       assert(fromIdx.nonEmpty)

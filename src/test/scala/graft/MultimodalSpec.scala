@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 
 /** The multimodal plumbing: typed mapPartitions decode (the codec-shaped
@@ -353,7 +354,10 @@ class MultimodalSpec extends SparkSpec {
         (i + 10000L, (0 until h).foldLeft(ph)((acc, k) =>
           acc ^ (1L << ((mix(i * 131 + k) & 63L).toInt))))
       }
-      val all = base ++ twins
+      // plus two hashes that differ only in bit 32, the low bit of the
+      // upper chunk at h = 0 (one band of two 32-bit chunks)
+      val all = base ++ twins ++
+        Seq((20000L, mix(99L)), (20001L, mix(99L) ^ (1L << 32)))
       val want = (for {
         (i, pi) <- all; (j, pj) <- all if i < j
         d = java.lang.Long.bitCount(pi ^ pj) if d <= h
@@ -369,13 +373,20 @@ class MultimodalSpec extends SparkSpec {
         .filter(col("hamming") <= h).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(share1 === want, s"h=$h: share1 banding disagrees")
+      // the pair-band candidates (mm_band_eval's share2 device) verify to
+      // the same set; at h = 0 its one band keys on the whole hash, so
+      // every candidate is an identical hash
+      val share2 = Multimodal.phashCandidatesPairBand(df, h).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(share2.filter(_._3 <= h) === want, s"h=$h: share2 banding disagrees")
+      if (h == 0) assert(share2.forall(_._3 == 0L), s"h=0 candidates: $share2")
     }
   }
 
   test("phashPairs fails loudly past the banding capacity, not silently quadratic") {
     import spark.implicits._
     // h = 15 ⇒ 17 chunks of 3 bits ⇒ 6-bit band keys ⇒ capacity 16·2^6
-    assert(Multimodal.bandCapacity(15) === 1024L)
+    assert(Dedup.bandCapacity(15, bits = 64) === 1024L)
     val df = (0 until 1100).map(i => (i.toLong, mix(i.toLong)))
       .toDF("media_id", "phash")
     val e = intercept[IllegalStateException](Multimodal.phashPairs(df, 15))

@@ -4,6 +4,7 @@
 # benchmark's smoke run.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+status_before=$(git status --porcelain)
 
 # every main under src/main is named in README.md: a main that no
 # documented workflow runs is deleted, not kept
@@ -25,4 +26,10 @@ sbt -batch "runMain graft.Bench" | grep -a '"metric"'
 # every perfbench workload at a tiny size with its output checks on: relay
 # rows against the generator's own, lake outputs through xcheck.py
 python3 perfbench/run.py --smoke
+# the checks leave the working tree as they found it
+if [ "$(git status --porcelain)" != "$status_before" ]; then
+  echo "check_all.sh changed the working tree:" >&2
+  git status --porcelain >&2
+  exit 1
+fi
 echo "ALL CHECKS PASSED"
