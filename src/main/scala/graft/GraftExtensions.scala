@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{CosineSimilarity, DotProduct, ExtJson, ExtJsonCanonical, Hashing}
+import graft.multimodal.Multimodal
 
 /** SQL-surface registration of the engine's expression family, so every
   * capability is reachable from `spark.sql("...")` — the reference's
@@ -33,9 +34,9 @@ import graft.functions.{CosineSimilarity, DotProduct, ExtJson, ExtJsonCanonical,
   * register as COMPOSED-EXPRESSION builders that delegate to the same
   * Column-level definitions the Scala API uses — one definition, two
   * surfaces, so the SQL form cannot drift from the Scala form, and the
-  * result stays fully codegen'd (no UDF boundary). The one exception is
-  * `winnow_fingerprints`, whose rolling-hash loop is imperative Scala —
-  * it registers as the same UDF the streaming guard uses.
+  * result stays fully codegen'd (no UDF boundary). The exceptions are
+  * imperative Scala behind a UDF: `winnow_fingerprints`, and the three
+  * media hashes, which register `Multimodal`'s own UDF values.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =
@@ -74,18 +75,6 @@ object GraftFunctions {
   private val winnowUdf =
     udf((text: String) =>
       if (text == null) null else graft.text.Winnow.fingerprints(text))
-
-  private val imageDhashUdf =
-    udf((bytes: Array[Byte]) =>
-      if (bytes == null) None else graft.multimodal.Multimodal.dHash(bytes))
-  private val audioFpUdf =
-    udf((bytes: Array[Byte]) =>
-      if (bytes == null) None
-      else graft.multimodal.Multimodal.audioFingerprint(bytes))
-  private val videoFpUdf =
-    udf((bytes: Array[Byte]) =>
-      if (bytes == null) None
-      else graft.multimodal.Multimodal.videoFingerprint(bytes))
 
   val all: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     // ---- native Catalyst expressions (codegen'd) ----
@@ -144,19 +133,19 @@ object GraftFunctions {
       info("winnow_fingerprints", "winnow_fingerprints(text) - winnowed rolling-hash fingerprint array"),
       (exprs: Seq[Expression]) => toExpr(winnowUdf(toCol(exprs(0))))),
 
-    // ---- codec UDF boundary: the three perceptual hashes, same
-    //      functions the mm_* queries run (JVM codec walks — PNG
-    //      decode, RIFF→PCM, stsz/stco demux — cannot be composed
-    //      expressions); NULL for undecodable payloads ----
+    // ---- codec UDF boundary: the three perceptual hashes register
+    //      the very UDF values the mm_* queries run (JVM codec walks —
+    //      PNG decode, RIFF→PCM, stsz/stco demux — cannot be composed
+    //      expressions); NULL for NULL or undecodable payloads ----
     ("image_dhash",
       info("image_dhash", "image_dhash(png_bytes) - 64-bit gradient-sign perceptual hash"),
-      (exprs: Seq[Expression]) => toExpr(imageDhashUdf(toCol(exprs(0))))),
+      (exprs: Seq[Expression]) => toExpr(Multimodal.dHashUdf(toCol(exprs(0))))),
     ("audio_fingerprint",
       info("audio_fingerprint", "audio_fingerprint(wav_bytes) - 64-bit energy-contour fingerprint"),
-      (exprs: Seq[Expression]) => toExpr(audioFpUdf(toCol(exprs(0))))),
+      (exprs: Seq[Expression]) => toExpr(Multimodal.audioFpUdf(toCol(exprs(0))))),
     ("video_fingerprint",
       info("video_fingerprint", "video_fingerprint(mp4_bytes) - 64-bit content-contour fingerprint"),
-      (exprs: Seq[Expression]) => toExpr(videoFpUdf(toCol(exprs(0))))))
+      (exprs: Seq[Expression]) => toExpr(Multimodal.videoFpUdf(toCol(exprs(0))))))
 
   /** Register on a live session (temp functions, session-scoped). */
   def registerAll(spark: SparkSession): Unit =

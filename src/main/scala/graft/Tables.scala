@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Fixture-table loaders (TESTDATA.md): one parquet file per table under
   * an sf directory. Kept trivial on purpose — the scan is the plan leaf
@@ -14,23 +14,16 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // events.ts normalizes to session-local TIMESTAMP micros whatever the
-    // fixture generation encoded it as:
-    //  - parquet TIMESTAMP(NANOS) (older fixtures): Spark 4 refuses it by
-    //    default (PARQUET_TYPE_ILLEGAL), so read as a long and floor-divide
-    //    to micros — the same truncation DuckDB applies reading ns into its
-    //    µs TIMESTAMP. `div` (integer division), not `/`: epoch-ns ≈ 1.7e18
-    //    exceeds a double's 2^53 integer range.
-    //  - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) (current
-    //    fixtures): arrives as TIMESTAMP_NTZ; the session timezone is
-    //    pinned to UTC everywhere (Bench/Verify/tests), so the cast to
-    //    TIMESTAMP is a value-exact re-tag, matching DuckDB's naive read.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events.ts is parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) in
+    // every fixture and arrives as TIMESTAMP_NTZ; the session timezone is
+    // pinned to UTC everywhere (Bench/Verify/tests), so the cast to
+    // TIMESTAMP is a value-exact re-tag, matching DuckDB's naive read.
+    // The loader reads with the caller's session as it is and changes
+    // none of its settings: a TIMESTAMP(NANOS) file fails with Spark's
+    // own error.
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events")
       df.schema("ts").dataType match {
-        case LongType =>
-          df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         case TimestampNTZType =>
           // The NTZ→TIMESTAMP cast is value-exact ONLY under a UTC
           // session; a session built without the pin would silently

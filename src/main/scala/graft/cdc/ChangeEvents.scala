@@ -74,14 +74,15 @@ object ChangeEvents {
   /** Keep only the four document ops; everything else (invalidate, drop,
     * dropDatabase, rename, …) goes to the dead-letter side ([[deadLetter]]).
     */
-  def opFilter(df: DataFrame, opCol: String = "operationType"): DataFrame =
-    df.filter(col(opCol).isin(DocumentOps: _*))
+  def opFilter(df: DataFrame): DataFrame =
+    df.filter(col("operationType").isin(DocumentOps: _*))
 
   /** The complement of [[opFilter]] plus parse failures — the events the
     * reference would crash on or silently drop (SURVEY.md §2.2).
     */
-  def deadLetter(df: DataFrame, opCol: String = "operationType"): DataFrame =
-    df.filter(!col(opCol).isin(DocumentOps: _*) || col(opCol).isNull)
+  def deadLetter(df: DataFrame): DataFrame =
+    df.filter(!col("operationType").isin(DocumentOps: _*) ||
+      col("operationType").isNull)
 
   /** Parse raw change-event JSON lines (the file-based stand-in for the
     * change-stream wire format) into the typed envelope, one

@@ -101,9 +101,9 @@ object Dedup {
     * `spark.read.parquet(path)` → [[jaccardPairsFromIndex]].
     */
   def writeShingleIndex(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, path: String, buckets: Int = 64): DataFrame = {
+      n: Int, path: String): DataFrame = {
     shingleIndex(docs, idCol, textCol, n)
-      .withColumn("shingle_bucket", pmod(xxhash64(col("shingle")), lit(buckets)))
+      .withColumn("shingle_bucket", pmod(xxhash64(col("shingle")), lit(64)))
       .write.partitionBy("shingle_bucket").mode("overwrite").parquet(path)
     docs.sparkSession.read.parquet(path)
   }
@@ -225,12 +225,11 @@ object Dedup {
     * broadcast-or-shuffle size enrichment); only the final ratio differs.
     */
   def containmentPairsFromIndex(idx: DataFrame, minContainment: Double,
-      maxShingleDf: Int = Int.MaxValue,
       sizesCap: Long = graft.queries.VocabGuard.MaxBroadcastEntries): DataFrame = {
     val sizes = idx.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val pairs = idx.groupBy("shingle")
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) > 1 && size(col("ds")) <= maxShingleDf)
+      .filter(size(col("ds")) > 1)
       .select(explode(expr(
         """flatten(transform(ds, (x, i) ->
           |  transform(slice(ds, i + 2, size(ds) - i - 1), y ->
@@ -728,7 +727,7 @@ object Dedup {
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
-  /** SRP table width that keeps mean bucket occupancy ≤ `occupancy` for
+  /** SRP table width that keeps mean bucket occupancy ≤ 16 for
     * an `n`-row corpus: a FIXED bit width is the same saturation disease
     * the hamming banding had — 2^bits buckets hold a growing corpus at
     * occupancy n/2^bits, and per-bucket self-join volume grows
@@ -736,11 +735,12 @@ object Dedup {
     * (measured: the 8-bit config ran 74 s at 30k vectors vs 16 s brute
     * force). Adaptive bits pin the collision term at
     * ~tables · occupancy · n — linear with a documented constant.
-    * Capped at 30 bits (plane literals stay bounded); corpora past
-    * occupancy·2^30 rows per table should raise `occupancy`/`tables`.
+    * Capped at 30 bits (plane literals stay bounded); past 16·2^30
+    * rows per table the occupancy grows past 16 — raise `tables`.
     */
-  def srpBitsFor(n: Long, floorBits: Int, occupancy: Long = 16L): Int = {
-    require(floorBits >= 1 && occupancy >= 1)
+  def srpBitsFor(n: Long, floorBits: Int): Int = {
+    require(floorBits >= 1)
+    val occupancy = 16L
     val pos = math.max(n, 1L)
     // overflow-safe ceil division (pos + occupancy - 1 wraps at Long.Max)
     val groups = pos / occupancy + (if (pos % occupancy == 0L) 0L else 1L)

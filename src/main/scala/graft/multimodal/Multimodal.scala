@@ -38,6 +38,12 @@ import graft.dedup.Dedup
   * amortized across rows — the same pattern a JNI/FFmpeg binding needs),
   * and the explode shape for frame sampling.
   *
+  * Each media concept is written once, and every modality and the SQL
+  * hashes (which register this object's UDFs) call it: the encoders
+  * [[encodePngBrightened]] / [[encodeWavScaled]] / [[encodeMp4Scaled]]
+  * (the plain encoders are delta 0 / gain 1), `decodePixels`,
+  * `decodePcm`, `findMp4Box`, `contourFingerprint` and `withTwins`.
+  *
   * Scale notes: media rows are orders of magnitude wider than their
   * metadata. The operators here keep bytes out of shuffles — metadata is
   * projected *before* any wide operation, and frame sampling explodes
@@ -70,20 +76,9 @@ object Multimodal {
     * deterministic pixel pattern. Every byte of the payload is produced
     * by the JDK's PNG encoder — downstream decode is a genuine parse.
     */
-  def encodePng(mediaId: Long): Array[Byte] = {
-    val (w, h) = imageDims(mediaId)
-    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-    val px = new Array[Int](w * h)
-    var i = 0
-    while (i < px.length) {
-      px(i) = ((mediaId * 2654435761L + (i % w) * 31 + (i / w) * 17) & 0xffffff).toInt
-      i += 1
-    }
-    img.setRGB(0, 0, w, h, px, 0, w)
-    val bos = new ByteArrayOutputStream()
-    ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
+  def encodePng(mediaId: Long): Array[Byte] =
+    // the +0 brightness encode: one copy of the pixel formula
+    encodePngBrightened(mediaId, 0)
 
   private val encodePngUdf = udf(encodePng _)
 
@@ -109,34 +104,41 @@ object Multimodal {
 
   private val decodePngDimsUdf = udf(decodePngDims _)
 
-  /** Full pixel decode + integer channel statistics: `ImageIO.read`
-    * inflates the whole PNG (the real pixel path, unlike
-    * [[decodePngDims]]'s header peek) and the RGB planes fold into
-    * exact integer sums — so the fixture's deterministic pixel formula
-    * lets ANY engine reproduce the result arithmetically, certifying
-    * the codec round trip at the sample level (the image analog of
-    * [[wavSampleStats]]).
+  /** The ONE full PNG pixel decode [[pngPixelStats]], [[pngThumbStats]]
+    * and [[dHash]] fold over: `ImageIO.read` inflates the whole stream
+    * (unlike [[decodePngDims]]'s header peek), then ONE bulk `getRGB`
+    * (per-pixel getRGB measured ~3× slower). (w, h, row-major RGB);
+    * None for undecodable or NULL bytes.
     */
-  def pngPixelStats(bytes: Array[Byte]): Option[(Long, Long, Long, Long)] =
+  private def decodePixels(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
     try {
       val img = ImageIO.read(new ByteArrayInputStream(bytes))
       if (img == null) None
       else {
-        val w = img.getWidth
-        val h = img.getHeight
-        val px = img.getRGB(0, 0, w, h, null, 0, w)
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var i = 0
-        while (i < px.length) {
-          val p = px(i)
-          sr += (p >> 16) & 255
-          sg += (p >> 8) & 255
-          sb += p & 255
-          i += 1
-        }
-        Some((w.toLong * h, sr, sg, sb))
+        val (w, h) = (img.getWidth, img.getHeight)
+        Some((w, h, img.getRGB(0, 0, w, h, null, 0, w)))
       }
     } catch { case _: Exception => None }
+
+  /** Full pixel decode + integer channel statistics: the RGB planes
+    * fold into exact integer sums — so the fixture's deterministic
+    * pixel formula lets ANY engine reproduce the result arithmetically,
+    * certifying the codec round trip at the sample level (the image
+    * analog of [[wavSampleStats]]).
+    */
+  def pngPixelStats(bytes: Array[Byte]): Option[(Long, Long, Long, Long)] =
+    decodePixels(bytes).map { case (w, h, px) =>
+      var sr = 0L; var sg = 0L; var sb = 0L
+      var i = 0
+      while (i < px.length) {
+        val p = px(i)
+        sr += (p >> 16) & 255
+        sg += (p >> 8) & 255
+        sb += p & 255
+        i += 1
+      }
+      (w.toLong * h, sr, sg, sb)
+    }
 
   private val pngStatsUdf = udf(pngPixelStats _)
 
@@ -160,39 +162,32 @@ object Multimodal {
     * — certifying the resize arithmetic, not just the decode.
     */
   def pngThumbStats(bytes: Array[Byte]): Option[(Int, Int, Long, Long, Long)] =
-    try {
-      val img = ImageIO.read(new ByteArrayInputStream(bytes))
-      if (img == null) None
-      else {
-        val w = img.getWidth
-        val h = img.getHeight
-        val px = img.getRGB(0, 0, w, h, null, 0, w)
-        val ow = w / 2
-        val oh = h / 2
-        var sr = 0L; var sg = 0L; var sb = 0L
-        var y = 0
-        while (y < oh) {
-          var x = 0
-          while (x < ow) {
-            var cr = 0; var cg = 0; var cb = 0
-            var dy = 0
-            while (dy < 2) {
-              var dx = 0
-              while (dx < 2) {
-                val p = px((2 * y + dy) * w + (2 * x + dx))
-                cr += (p >> 16) & 255; cg += (p >> 8) & 255; cb += p & 255
-                dx += 1
-              }
-              dy += 1
+    decodePixels(bytes).map { case (w, h, px) =>
+      val ow = w / 2
+      val oh = h / 2
+      var sr = 0L; var sg = 0L; var sb = 0L
+      var y = 0
+      while (y < oh) {
+        var x = 0
+        while (x < ow) {
+          var cr = 0; var cg = 0; var cb = 0
+          var dy = 0
+          while (dy < 2) {
+            var dx = 0
+            while (dx < 2) {
+              val p = px((2 * y + dy) * w + (2 * x + dx))
+              cr += (p >> 16) & 255; cg += (p >> 8) & 255; cb += p & 255
+              dx += 1
             }
-            sr += cr / 4; sg += cg / 4; sb += cb / 4
-            x += 1
+            dy += 1
           }
-          y += 1
+          sr += cr / 4; sg += cg / 4; sb += cb / 4
+          x += 1
         }
-        Some((ow, oh, sr, sg, sb))
+        y += 1
       }
-    } catch { case _: Exception => None }
+      (ow, oh, sr, sg, sb)
+    }
 
   private val pngThumbUdf = udf(pngThumbStats _)
 
@@ -248,13 +243,6 @@ object Multimodal {
 
   private val wavMetaUdf = udf(decodeWavMeta _)
 
-  /** Full PCM decode + integer sample statistics: run the payload
-    * through `AudioSystem.getAudioInputStream` (the real RIFF→PCM
-    * path, not a header peek), then fold the 16-bit LE samples into
-    * (nSamples, Σs², peak |s|, clipped-count) — all integer-exact, so
-    * the downstream rms/clip-ratio arithmetic is bit-reproducible by
-    * any engine that can regenerate the deterministic samples.
-    */
   /** The ONE RIFF→PCM decode both sample consumers fold over: the
     * 16-bit LE stream as signed ints, None for undecodable bytes. A
     * decode fix lands in the stats and the fingerprint together.
@@ -273,6 +261,13 @@ object Multimodal {
       Some(out)
     } catch { case _: Exception => None }
 
+  /** Full PCM decode + integer sample statistics: run the payload
+    * through `AudioSystem.getAudioInputStream` (the real RIFF→PCM
+    * path, not a header peek), then fold the 16-bit LE samples into
+    * (nSamples, Σs², peak |s|, clipped-count) — all integer-exact, so
+    * the downstream rms/clip-ratio arithmetic is bit-reproducible by
+    * any engine that can regenerate the deterministic samples.
+    */
   def wavSampleStats(bytes: Array[Byte]): Option[(Long, Long, Long, Long)] =
     decodePcm(bytes).map { pcm =>
       var i = 0
@@ -354,8 +349,19 @@ object Multimodal {
     * frame CODEC exists in this container, but every structural field a
     * demuxer walks is spec-correct.
     */
-  def encodeMp4(mediaId: Long, gainNum: Int = 1, gainDen: Int = 1)
-      : Array[Byte] = {
+  def encodeMp4(mediaId: Long): Array[Byte] =
+    // the ×1 gain encode: one copy of the container and mdat formula
+    encodeMp4Scaled(mediaId, 1, 1)
+
+  private val encodeMp4Udf = udf(encodeMp4 _)
+
+  /** Re-encode `mediaId`'s fixture video with every elementary-stream
+    * byte scaled by num/den (truncated; bytes are unsigned so floor =
+    * truncation) — the planted near-duplicate for [[videoFingerprints]]:
+    * the video twin of [[encodeWavScaled]]. The container boxes are
+    * byte-identical (same sample table); only the mdat content dims.
+    */
+  def encodeMp4Scaled(mediaId: Long, num: Int, den: Int): Array[Byte] = {
     val (w, h, fps, nF) = videoParams(mediaId)
     val ftyp = mp4Box("ftyp", {
       val bb = ByteBuffer.allocate(16)
@@ -429,22 +435,12 @@ object Multimodal {
     var i = 0
     while (i < filler.length) {
       filler(i) =
-        ((((mediaId * 31 + i * 131) & 0xff) * gainNum / gainDen).toByte)
+        ((((mediaId * 31 + i * 131) & 0xff) * num / den).toByte)
       i += 1
     }
     ftyp ++ moov(mdatPayloadOff) ++ mp4Box("mdat", filler)
   }
 
-  /** Re-encode `mediaId`'s fixture video with every elementary-stream
-    * byte scaled by num/den (truncated; bytes are unsigned so floor =
-    * truncation) — the planted near-duplicate for [[videoFingerprints]]:
-    * the video twin of [[encodeWavScaled]]. The container boxes are
-    * byte-identical (same sample table); only the mdat content dims.
-    */
-  def encodeMp4Scaled(mediaId: Long, num: Int, den: Int): Array[Byte] =
-    encodeMp4(mediaId, num, den)
-
-  private val encodeMp4Udf = udf((id: Long) => encodeMp4(id))
   private val encodeMp4ScaledUdf = udf(encodeMp4Scaled _)
 
   private def beInt(bytes: Array[Byte], off: Int): Int =
@@ -458,25 +454,12 @@ object Multimodal {
     * not a well-formed ISO-BMFF stream. Pure byte arithmetic — container
     * headers need no codec.
     */
-  def decodeMp4Meta(bytes: Array[Byte]): Option[(Int, Long, Int, Int)] = {
-    // (payloadStart, boxEnd) of the first `tpe` box in [start, end)
-    def findBox(start: Int, end: Int, tpe: String): Option[(Int, Int)] = {
-      var off = start
-      while (off + 8 <= end) {
-        val size = beInt(bytes, off)
-        if (size < 8 || off + size > end) return None
-        if (new String(bytes, off + 4, 4, "US-ASCII") == tpe)
-          return Some((off + 8, off + size))
-        off += size
-      }
-      None
-    }
+  def decodeMp4Meta(bytes: Array[Byte]): Option[(Int, Long, Int, Int)] =
     try {
       for {
-        (moovS, moovE) <- findBox(0, bytes.length, "moov")
-        (mvhdS, mvhdE) <- findBox(moovS, moovE, "mvhd")
-        (trakS, trakE) <- findBox(moovS, moovE, "trak")
-        (tkhdS, tkhdE) <- findBox(trakS, trakE, "tkhd")
+        (moovS, moovE) <- findMp4Box(bytes, 0, bytes.length, "moov")
+        (mvhdS, mvhdE) <- findMp4Box(bytes, moovS, moovE, "mvhd")
+        (tkhdS, tkhdE) <- findMp4Box(bytes, moovS, moovE, "trak", "tkhd")
         if mvhdE - mvhdS >= 100 && tkhdE - tkhdS >= 84
         // version-0 boxes only (32-bit times); version-1 would shift offsets
         if bytes(mvhdS) == 0 && bytes(tkhdS) == 0
@@ -486,7 +469,6 @@ object Multimodal {
         beInt(bytes, tkhdS + 76) >>> 16,                // width  16.16 → int
         beInt(bytes, tkhdS + 80) >>> 16)                // height 16.16 → int
     } catch { case _: Exception => None }
-  }
 
   private val mp4MetaUdf = udf(decodeMp4Meta _)
 
@@ -499,18 +481,13 @@ object Multimodal {
     * None when the boxes are absent or malformed.
     */
   def decodeMp4SampleTable(bytes: Array[Byte])
-      : Option[(Array[Long], Array[Int])] = {
-    def findBox(start: Int, end: Int, tpe: String): Option[(Int, Int)] =
-      findMp4Box(bytes, start, end, tpe)
+      : Option[(Array[Long], Array[Int])] =
     try {
       for {
-        (moovS, moovE) <- findBox(0, bytes.length, "moov")
-        (trakS, trakE) <- findBox(moovS, moovE, "trak")
-        (mdiaS, mdiaE) <- findBox(trakS, trakE, "mdia")
-        (minfS, minfE) <- findBox(mdiaS, mdiaE, "minf")
-        (stblS, stblE) <- findBox(minfS, minfE, "stbl")
-        (stszS, stszE) <- findBox(stblS, stblE, "stsz")
-        (stcoS, stcoE) <- findBox(stblS, stblE, "stco")
+        (stblS, stblE) <- findMp4Box(bytes, 0, bytes.length,
+          "moov", "trak", "mdia", "minf", "stbl")
+        (stszS, stszE) <- findMp4Box(bytes, stblS, stblE, "stsz")
+        (stcoS, stcoE) <- findMp4Box(bytes, stblS, stblE, "stco")
         if stszE - stszS >= 12 && stcoE - stcoS >= 12
         uniform = beInt(bytes, stszS + 4)
         count = beInt(bytes, stszS + 8)
@@ -533,21 +510,22 @@ object Multimodal {
         (offsets, sizes)
       }
     } catch { case _: Exception => None }
-  }
 
   private val mp4SampleTableUdf = udf(decodeMp4SampleTable _)
 
-  /** Child-box scan shared by the MP4 walks: payload bounds of the first
-    * `tpe` box between `start` and `end`, None when absent/malformed.
+  /** The ONE child-box scan of every MP4 walk: payload bounds of the
+    * box at `path` between `start` and `end` (the first box of each name,
+    * each inside the one before), None when absent/malformed.
     */
   private def findMp4Box(bytes: Array[Byte], start: Int, end: Int,
-      tpe: String): Option[(Int, Int)] = {
+      path: String*): Option[(Int, Int)] = {
+    if (path.isEmpty) return Some((start, end))
     var off = start
     while (off + 8 <= end) {
       val size = beInt(bytes, off)
       if (size < 8 || off + size > end) return None
-      if (new String(bytes, off + 4, 4, "US-ASCII") == tpe)
-        return Some((off + 8, off + size))
+      if (new String(bytes, off + 4, 4, "US-ASCII") == path.head)
+        return findMp4Box(bytes, off + 8, off + size, path.tail: _*)
       off += size
     }
     None
@@ -563,12 +541,8 @@ object Multimodal {
   def decodeMp4SyncSamples(bytes: Array[Byte]): Option[Array[Int]] = {
     try {
       for {
-        (moovS, moovE) <- findMp4Box(bytes, 0, bytes.length, "moov")
-        (trakS, trakE) <- findMp4Box(bytes, moovS, moovE, "trak")
-        (mdiaS, mdiaE) <- findMp4Box(bytes, trakS, trakE, "mdia")
-        (minfS, minfE) <- findMp4Box(bytes, mdiaS, mdiaE, "minf")
-        (stblS, stblE) <- findMp4Box(bytes, minfS, minfE, "stbl")
-        (stssS, stssE) <- findMp4Box(bytes, stblS, stblE, "stss")
+        (stssS, stssE) <- findMp4Box(bytes, 0, bytes.length,
+          "moov", "trak", "mdia", "minf", "stbl", "stss")
         if stssE - stssS >= 8
         count = beInt(bytes, stssS + 4)
         if count >= 0 && (stssE - stssS).toLong >= 8L + 4L * count
@@ -588,15 +562,11 @@ object Multimodal {
     * JVMs/platforms. None for undecodable payloads.
     */
   def dHash(bytes: Array[Byte]): Option[Long] = {
-    val img =
-      try ImageIO.read(new ByteArrayInputStream(bytes))
-      catch { case _: Exception => null }
-    if (img == null) return None
-    val (w, h) = (img.getWidth, img.getHeight)
+    val (w, h, px) = decodePixels(bytes) match {
+      case Some(d) => d
+      case None => return None
+    }
     if (w < 9 || h < 8) return None
-    // bulk raster fetch: ONE getRGB call (per-pixel getRGB pays a
-    // ColorModel conversion per call — measured ~3× slower)
-    val px = img.getRGB(0, 0, w, h, null, 0, w)
     // 9×8 box-average grayscale grid: per cell keep (sum, count) so the
     // bit test below can cross-multiply — no division rounding anywhere
     val sums = Array.ofDim[Long](8, 9)
@@ -632,7 +602,8 @@ object Multimodal {
     Some(hash)
   }
 
-  private val dHashUdf = udf(dHash _)
+  // also the SQL `image_dhash` function (graft.GraftFunctions)
+  private[graft] val dHashUdf = udf(dHash _)
 
   /** Perceptual hashes of the image rows: (media_id, phash). Decode is
     * the whole cost — a narrow projection, zero shuffle, linear scan.
@@ -697,40 +668,45 @@ object Multimodal {
       .distinct()
   }
 
+  /** The ONE 64-bit contour fingerprint of the audio and video hashes:
+    * the n values of `v` sum into 65 windows (value j into window
+    * j·65/n), and bit k is set when window k's MEAN exceeds window
+    * k+1's, cross-multiplied in exact integers. A uniform gain leaves
+    * the bits intact. None for fewer than 65 values.
+    */
+  private def contourFingerprint(v: Array[Int]): Option[Long] = {
+    val n = v.length
+    if (n < 65) return None
+    val sums = new Array[Long](65)
+    val cnts = new Array[Long](65)
+    var j = 0
+    while (j < n) {
+      val w = (j.toLong * 65 / n).toInt
+      sums(w) += v(j)
+      cnts(w) += 1
+      j += 1
+    }
+    var fp = 0L
+    var k = 0
+    while (k < 64) {
+      if (sums(k) * cnts(k + 1) > sums(k + 1) * cnts(k)) fp |= 1L << k
+      k += 1
+    }
+    Some(fp)
+  }
+
   /** 64-bit energy-contour fingerprint of a WAV payload — the audio twin
-    * of [[dHash]]: the PCM stream decodes once, |sample| sums accumulate
-    * into 65 equal time windows, and bit k records whether window k's
-    * MEAN |amplitude| exceeds window k+1's (cross-multiplied exact
-    * integers, since window sizes can differ by one sample). A gain
-    * change scales every window sum by the same positive factor and
-    * leaves the contour signs intact — the near-dup robustness a raw
-    * PCM hash lacks. None for undecodable bytes or clips shorter than
-    * 65 samples. Unlike the image hash, this one is ORACLE-able: the
-    * fixture samples are arithmetic in (media_id, i), so DuckDB can
-    * regenerate the windows and the bit string.
+    * of [[dHash]]: `contourFingerprint` over the decoded |sample| values.
+    * None for undecodable bytes or clips shorter than 65 samples.
+    * ORACLE-able, unlike the image hash: the fixture samples are
+    * arithmetic in (media_id, i), so DuckDB regenerates the bit string.
     */
   def audioFingerprint(bytes: Array[Byte]): Option[Long] =
-    decodePcm(bytes).filter(_.length >= 65).map { pcm =>
-      val n = pcm.length
-      val sums = new Array[Long](65)
-      val cnts = new Array[Long](65)
-      var i = 0
-      while (i < n) {
-        val w = (i.toLong * 65 / n).toInt
-        sums(w) += math.abs(pcm(i).toLong)
-        cnts(w) += 1
-        i += 1
-      }
-      var fp = 0L
-      var k = 0
-      while (k < 64) {
-        if (sums(k) * cnts(k + 1) > sums(k + 1) * cnts(k)) fp |= 1L << k
-        k += 1
-      }
-      fp
-    }
+    decodePcm(bytes).flatMap(pcm =>
+      contourFingerprint(pcm.map(s => math.abs(s))))
 
-  private val audioFpUdf = udf(audioFingerprint _)
+  // also the SQL `audio_fingerprint` function (graft.GraftFunctions)
+  private[graft] val audioFpUdf = udf(audioFingerprint _)
 
   /** Energy-contour fingerprints of the audio rows, `(media_id, phash)`
     * — the column is named like the image hash so [[phashPairs]]'s
@@ -773,35 +749,21 @@ object Multimodal {
     * pair demo/test: each clip should pair with exactly its twin.
     */
   def withScaledAudioTwins(media: DataFrame, num: Int, den: Int,
-      twinOffset: Long): DataFrame = {
-    requireMediaSchema(media, "withScaledAudioTwins")
-    // the guard rides the PASSTHROUGH projection: every input row of
-    // every kind is checked (a non-audio row at/above the offset would
-    // collide with a twin id just as silently), not only the twinned one
-    media.select(guardedId(twinOffset).as("media_id"), col("kind"),
-        col("bytes"))
-      .unionByName(media.filter(col("kind") === "audio")
-        .select((col("media_id") + twinOffset).as("media_id"), col("kind"),
-          encodeWavScaledUdf(col("media_id"), lit(num), lit(den)).as("bytes")))
-  }
+      twinOffset: Long): DataFrame =
+    withTwins(media, "audio", twinOffset,
+      encodeWavScaledUdf(col("media_id"), lit(num), lit(den)))
 
   /** 64-bit content-contour fingerprint of an MP4 payload — the video
     * member of the perceptual-hash family ([[dHash]] / [[audioFingerprint]]):
-    * the REAL stsz/stco sample-table walk locates every frame's byte
-    * range, the frames' bytes concatenate into the elementary stream
-    * (exactly what a demuxer hands the decoder), unsigned byte values
-    * sum into 65 equal stream windows, and bit k records whether window
-    * k's mean exceeds window k+1's (cross-multiplied exact integers —
-    * the [[audioFingerprint]] convention). A uniform content gain
-    * scales every window sum by the same positive factor and leaves
-    * the contour signs intact. None for unparseable containers, frame
-    * ranges outside the payload, or streams shorter than 65 bytes.
-    * ORACLE-able: the fixture mdat bytes are arithmetic in
-    * (media_id, i), so DuckDB regenerates windows and bits exactly.
+    * `contourFingerprint` over the unsigned bytes of the elementary
+    * stream, the frames the REAL stsz/stco walk locates joined in order
+    * (what a demuxer hands the decoder). None for unparseable
+    * containers, frame ranges outside the payload, a stream longer than
+    * the payload, or streams shorter than 65 bytes. ORACLE-able: the
+    * fixture mdat bytes are arithmetic in (media_id, i).
     */
   def videoFingerprint(bytes: Array[Byte]): Option[Long] =
     decodeMp4SampleTable(bytes).flatMap { case (offsets, sizes) =>
-      val total = sizes.foldLeft(0L)(_ + _)
       // EVERY frame range must be validated, not just the first offset
       // and the last frame: decodeMp4SampleTable accepts arbitrary
       // 32-bit stsz values (negative, non-monotonic), so a crafted
@@ -814,34 +776,16 @@ object Multimodal {
         sizes(f) >= 0 && offsets(f) >= 0 &&
           offsets(f) + sizes(f) <= bytes.length
       }
-      if (total < 65 || !inBounds) None
-      else {
-        val sums = new Array[Long](65)
-        val cnts = new Array[Long](65)
-        var pos = 0L
-        var f = 0
-        while (f < sizes.length) {
-          var j = 0
-          while (j < sizes(f)) {
-            val w = (pos * 65 / total).toInt
-            sums(w) += (bytes((offsets(f) + j).toInt) & 0xff).toLong
-            cnts(w) += 1
-            pos += 1
-            j += 1
-          }
-          f += 1
-        }
-        var fp = 0L
-        var k = 0
-        while (k < 64) {
-          if (sums(k) * cnts(k + 1) > sums(k + 1) * cnts(k)) fp |= 1L << k
-          k += 1
-        }
-        Some(fp)
-      }
+      // frames do not overlap, so a joined stream longer than the
+      // payload is malformed, not an allocation
+      if (!inBounds || sizes.foldLeft(0L)(_ + _) > bytes.length) None
+      else contourFingerprint(Array.concat(sizes.indices.map(f =>
+        bytes.slice(offsets(f).toInt, offsets(f).toInt + sizes(f))): _*)
+        .map(_ & 0xff))
     }
 
-  private val videoFpUdf = udf(videoFingerprint _)
+  // also the SQL `video_fingerprint` function (graft.GraftFunctions)
+  private[graft] val videoFpUdf = udf(videoFingerprint _)
 
   /** Content-contour fingerprints of the video rows, `(media_id, phash)`
     * — named like the image hash so [[phashPairs]]'s pigeonhole banding
@@ -857,23 +801,27 @@ object Multimodal {
     * pair demo/test, mirroring [[withScaledAudioTwins]].
     */
   def withScaledVideoTwins(media: DataFrame, num: Int, den: Int,
-      twinOffset: Long): DataFrame = {
-    requireMediaSchema(media, "withScaledVideoTwins")
+      twinOffset: Long): DataFrame =
+    withTwins(media, "video", twinOffset,
+      encodeMp4ScaledUdf(col("media_id"), lit(num), lit(den)))
+
+  /** The ONE planted-twin builder of the three `with*Twins`: each
+    * `kind` row adds a twin at `media_id + twinOffset` with payload
+    * `twinBytes`. Unions BY NAME over exactly the fakeMediaFromDocs
+    * columns (a positional union misaligns a reordered frame), and
+    * [[guardedId]] rides the passthrough, so a real row of ANY kind
+    * at/above the offset fails the job.
+    */
+  private def withTwins(media: DataFrame, kind: String, twinOffset: Long,
+      twinBytes: Column): DataFrame = {
+    val need = Set("media_id", "kind", "bytes")
+    require(media.columns.toSet == need, s"the $kind twin builder expects " +
+      s"columns $need, got ${media.columns.mkString("(", ", ", ")")}")
     media.select(guardedId(twinOffset).as("media_id"), col("kind"),
         col("bytes"))
-      .unionByName(media.filter(col("kind") === "video")
+      .unionByName(media.filter(col("kind") === kind)
         .select((col("media_id") + twinOffset).as("media_id"), col("kind"),
-          encodeMp4ScaledUdf(col("media_id"), lit(num), lit(den)).as("bytes")))
-  }
-
-  /** Twin-builder input contract: positional unions silently misalign a
-    * caller's differently-ordered frame, so both builders union BY NAME
-    * and demand exactly the fakeMediaFromDocs column set up front.
-    */
-  private def requireMediaSchema(media: DataFrame, who: String): Unit = {
-    val need = Set("media_id", "kind", "bytes")
-    require(media.columns.toSet == need,
-      s"$who expects columns $need, got ${media.columns.mkString("(", ", ", ")")}")
+          twinBytes.as("bytes")))
   }
 
   /** Data-derived twin offset: one above the frame's max media_id (a
@@ -934,15 +882,9 @@ object Multimodal {
     * demo/test: each image should pair with exactly its twin.
     */
   def withBrightenedTwins(media: DataFrame, delta: Int,
-      twinOffset: Long): DataFrame = {
-    requireMediaSchema(media, "withBrightenedTwins")
-    // guard on the passthrough projection — see withScaledAudioTwins
-    media.select(guardedId(twinOffset).as("media_id"), col("kind"),
-        col("bytes"))
-      .unionByName(media.filter(col("kind") === "image")
-        .select((col("media_id") + twinOffset).as("media_id"), col("kind"),
-          encodePngBrightenedUdf(col("media_id"), lit(delta)).as("bytes")))
-  }
+      twinOffset: Long): DataFrame =
+    withTwins(media, "image", twinOffset,
+      encodePngBrightenedUdf(col("media_id"), lit(delta)))
 
   private def kindOf(idCol: Column): Column =
     element_at(array(lit("image"), lit("audio"), lit("video")),

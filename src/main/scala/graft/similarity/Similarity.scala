@@ -182,7 +182,7 @@ object Similarity {
     * centroid whose bucket exceeds `maxRows` into `ceil(n / maxRows)`
     * sub-centroids learned by a mini spherical-KMeans over just that
     * bucket, then reassigns GLOBALLY and repeats (a split can shift
-    * neighboring buckets) until every bucket fits or `maxRounds` is hit.
+    * neighboring buckets) until every bucket fits or 4 rounds have run.
     *
     * Driver work per round is one ≤k-row count and one small fit per hot
     * bucket (hot buckets are few by definition); corpus work is one
@@ -194,14 +194,15 @@ object Similarity {
     *
     * Degenerate corner: a bucket of IDENTICAL vectors cannot be split by
     * centroid routing (every sub-centroid coincides; ties go to the
-    * smallest cid) — `maxRounds` bounds the attempt and the oversized
+    * smallest cid) — the 4-round limit bounds the attempt and the oversized
     * bucket survives, which is the honest outcome (such data needs an
     * id-hash sub-split at WRITE time, not a routing change).
     */
   def balancedCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       initial: DataFrame, cidCol: String, cvecCol: String,
-      maxRows: Long, dim: Int, maxRounds: Int = 4, fitIters: Int = 3)
-      : DataFrame = {
+      maxRows: Long, dim: Int): DataFrame = {
+    val maxRounds = 4
+    val fitIters = 3
     val spark = corpus.sparkSession
     def toDf(cs: Seq[(Int, Seq[Float])]): DataFrame =
       spark.createDataFrame(

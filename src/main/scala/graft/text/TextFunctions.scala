@@ -98,8 +98,8 @@ object TextFunctions {
     *     newlines, so the document's LINE structure survives tag removal;
     *  2. every remaining tag is stripped;
     *  3. entities decode ([[HtmlEntities]]);
-    *  4. the boilerplate heuristic drops SHORT lines (< `minLineChars`
-    *     chars): nav bars, cookie banners, footers and titles are short,
+    *  4. the boilerplate heuristic drops SHORT lines (< 20 chars): nav
+    *     bars, cookie banners, footers and titles are short,
     *     content paragraphs are long — the classic length-based
     *     boilerplate filter — then whitespace collapses to single spaces.
     *
@@ -107,14 +107,13 @@ object TextFunctions {
     * identical in Java regex and RE2 (the DuckDB oracle runs the same
     * pattern strings verbatim).
     */
-  def stripHtml(html: Column, minLineChars: Int = 20): Column = {
+  def stripHtml(html: Column): Column = {
     val lined = regexp_replace(html, "</(title|p|div|nav|footer|h[1-6]|li)>", "\n")
     val untagged = regexp_replace(lined, "<[^>]*>", "")
     val decoded = HtmlEntities.foldLeft(untagged) {
       case (c, (e, r)) => replace(c, lit(e), lit(r))
     }
-    val deboiler =
-      regexp_replace(decoded, s"(?m)^.{0,${minLineChars - 1}}$$\\n?", "")
+    val deboiler = regexp_replace(decoded, "(?m)^.{0,19}$\\n?", "")
     trim(regexp_replace(deboiler, "\\s+", " "))
   }
 

@@ -229,6 +229,23 @@ class MultimodalSpec extends SparkSpec {
       s"${twinPairs.length} of $nImages planted twins recovered")
     // …and the hamming verify is exact on every emitted pair
     pairs.foreach(r => assert(r.getLong(2) <= 6))
+    // the twin guard all three builders share: a frame without exactly
+    // (media_id, kind, bytes) is rejected up front, and a real id at or
+    // above the offset fails the job
+    val builders: Seq[(org.apache.spark.sql.DataFrame, Long) =>
+        org.apache.spark.sql.DataFrame] = Seq(
+      Multimodal.withBrightenedTwins(_, delta = 8, _),
+      Multimodal.withScaledAudioTwins(_, num = 7, den = 8, _),
+      Multimodal.withScaledVideoTwins(_, num = 7, den = 8, _))
+    val maxId = Multimodal.twinOffsetFor(media) - 1
+    builders.foreach { build =>
+      intercept[IllegalArgumentException](
+        build(media.withColumn("extra", lit(1)), 1000000L))
+      intercept[IllegalArgumentException](build(media.drop("kind"), 1000000L))
+      val e = intercept[Exception](build(media, maxId).collect())
+      assert(e.getMessage.contains(s"twin offset $maxId <= real media_id"),
+        e.getMessage)
+    }
   }
 
   test("audio fingerprint: deterministic, gain-invariant-ish, garbage-rejecting") {

@@ -236,6 +236,12 @@ class SqlSurfaceSpec extends SparkSpec {
     assertTwin("mm_video_fp",
       """SELECT media_id, lpad(bin(video_fingerprint(bytes)), 64, '0') AS fp_bits
          FROM media WHERE kind = 'video' ORDER BY media_id""")
+    // NULL bytes hash to NULL in each of the three
+    val nulls = spark.sql(
+      """SELECT image_dhash(CAST(NULL AS BINARY)),
+                audio_fingerprint(CAST(NULL AS BINARY)),
+                video_fingerprint(CAST(NULL AS BINARY))""").head()
+    assert((0 until 3).forall(nulls.isNullAt), nulls)
   }
 
   test("the extensions injection path registers the same surface on a fresh session") {

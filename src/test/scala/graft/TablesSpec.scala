@@ -7,8 +7,9 @@ package graft
 class TablesSpec extends SparkSpec {
 
   test("events load under a non-UTC session fails loudly on NTZ fixtures") {
-    // synthesize an NTZ-typed events fixture (the shipped sf dirs carry
-    // TIMESTAMP(NANOS), which takes the long-read branch and needs no tz)
+    // synthesize an NTZ-typed events fixture: the same parquet
+    // TIMESTAMP(MICROS, isAdjustedToUTC=false) type the shipped sf dirs
+    // carry, written here so the test owns its input
     val dir = "/tmp/graft_ntz_fixture"
     spark.range(3)
       .selectExpr("id AS event_id", "timestamp_ntz'2024-01-01 00:00:00' AS ts")
@@ -24,5 +25,12 @@ class TablesSpec extends SparkSpec {
       spark.conf.set("spark.sql.session.timeZone", "UTC")
       assert(Tables.table(spark, dir, "events").count() === 3)
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
+    // a load changes none of the caller's session settings (it used to
+    // switch spark.sql.legacy.parquet.nanosAsLong on for every later read)
+    val fresh = spark.newSession()
+    fresh.conf.set("spark.sql.session.timeZone", "UTC")
+    val before = fresh.conf.getAll
+    assert(Tables.table(fresh, dir, "events").count() === 3)
+    assert(fresh.conf.getAll === before)
   }
 }

@@ -12,6 +12,9 @@ for m in $(awk '/^object [A-Za-z0-9_]+/ {o = $2} /def main\(/ {print o}' \
     $(grep -rl 'def main(' src/main/scala)); do
   grep -qw "$m" README.md || { echo "main $m is not named in README.md" >&2; exit 1; }
 done
+# library code does not change its caller's session settings
+! grep -rn 'conf\.set(' src/main \
+  || { echo "src/main calls conf.set( on a caller's session" >&2; exit 1; }
 
 sbt -batch clean test
 

@@ -3,7 +3,8 @@
 each fact table from sf0.1 repeated 10x with key columns offset by
 replica*1e8 (joins stay consistent within a replica); region/nation
 kept as-is; physical parquet types preserved via pyarrow (notably
-events.ts TIMESTAMP_NANOS, which graft.Tables depends on).
+events.ts TIMESTAMP(MICROS, isAdjustedToUTC=false), which graft.Tables
+reads as TIMESTAMP_NTZ).
 
 Usage: python3 tools/make_sf1.py [src_dir] [dst_dir]
 """
