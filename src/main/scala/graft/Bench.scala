@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract). Each query is forced through a
   * `noop` sink so the FULL plan executes — `count()` would let Catalyst
@@ -10,18 +8,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same injection as Verify: the SQL registry is part of the
-      // measured engine, not a test-only surface
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // same injection as Verify: the SQL registry is part of the
+    // measured engine, not a test-only surface
+    val spark = SparkEntry.localSession("spark.sql.extensions" -> "graft.GraftExtensions")
     // shared-JVM belt: builder config is skipped when getOrCreate reuses
     // a session — attach + assert so the loud-failure goal always holds
     GraftFunctions.ensureAttached(spark)

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Drive the flagship relay pipeline end-to-end and print what a Kafka
   * consumer would see — the runtime surface of the library for smoke
   * verification (`sbt "runMain graft.Demo"`).
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     val out = SparkEntry.entry(spark)
     println(s"rows=${out.count()}")
     println("topics:")

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -63,13 +63,9 @@ object RetryProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8, 3]") // 3 attempts per task: injected failure retries
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(
+      "spark.master" -> "local[8, 3]", // 3 attempts per task: injected failure retries
+      "spark.sql.shuffle.partitions" -> "8")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         if (t.reason != org.apache.spark.Success) failsSeen.incrementAndGet()

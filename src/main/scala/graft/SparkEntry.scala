@@ -10,6 +10,26 @@ import graft.queries._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
+  /** The local session every main runs on: `local[n]` with `n` shuffle
+    * partitions, where `n` is `SPARK_GRAFT_CPUS` (4 when unset: Verify's
+    * dumps are compared with exact floats, so their partitioning stays
+    * fixed), the UTC session time zone that [[Tables.table]] requires,
+    * no UI and WARN logging. `conf` pairs are applied last, so they
+    * override these defaults.
+    */
+  def localSession(conf: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val defaults = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(defaults) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** All declared engine capabilities, one [[graft.queries.Q]] each. */
   def allQueries: Seq[Q] =
     CdcQueries.queries ++ RelationalQueries.queries ++ ExtendedQueries.queries ++

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.functions.{ExtJsonCanonical, Utf8Sink}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,18 +13,10 @@ object Verify {
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the SQL front door rides the protocol run: injection failures
-      // (a renamed class, a builder that stopped resolving) fail the
-      // round loudly instead of rotting between SqlSurfaceSpec runs
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the SQL front door rides the protocol run: injection failures
+    // (a renamed class, a builder that stopped resolving) fail the
+    // round loudly instead of rotting between SqlSurfaceSpec runs
+    val spark = SparkEntry.localSession("spark.sql.extensions" -> "graft.GraftExtensions")
     // shared-JVM belt: builder config is skipped when getOrCreate reuses
     // a session — attach + assert so the loud-failure goal always holds
     GraftFunctions.ensureAttached(spark)
@@ -44,21 +38,18 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSqlFor(spark, sfDir, only)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // every key and SQL text goes through the relay's JSON string
+    // escaper, so a tab or CR in an oracle cannot break json.load
+    val json = new Utf8Sink
+    json.byte('{')
+    SparkEntry.oracleSqlFor(spark, sfDir, only).zipWithIndex.foreach { case ((k, v), i) =>
+      if (i > 0) json.byte(',')
+      ExtJsonCanonical.escape(json, k)
+      json.byte(':')
+      ExtJsonCanonical.escape(json, v)
+    }
+    json.byte('}')
+    Files.write(Paths.get(s"$outDir/oracle_sql.json"), json.toUTF8String.getBytes)
     spark.stop()
   }
 }

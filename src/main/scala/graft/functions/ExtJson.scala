@@ -182,7 +182,7 @@ object ExtJsonCanonical {
   /** [[escape]] of a `String`; a name of plain printable ASCII, such as
     * most field names, is copied without an intermediate `UTF8String`.
     */
-  private def escape(out: Utf8Sink, s: String): Unit = {
+  private[graft] def escape(out: Utf8Sink, s: String): Unit = {
     var i = 0
     while (i < s.length && { val c = s.charAt(i); c >= ' ' && c < 0x7F && AsciiEscape(c) == null })
       i += 1

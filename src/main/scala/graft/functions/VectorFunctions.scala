@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -11,10 +12,11 @@ import org.apache.spark.sql.types._
   *
   * Cosine similarity is the hot inner loop of both brute-force kNN and
   * embedding near-dedup — at 100 TB it runs billions of times per probe
-  * batch, so it is a full-codegen Catalyst expression (tight primitive
-  * float loop, no boxing, no UDF SerDe), not a Scala UDF: `doGenCode`
-  * emits a fused dot/norm loop that whole-stage codegen inlines straight
-  * into the surrounding join/aggregate stage.
+  * batch, so it is a codegen'd Catalyst expression (tight primitive
+  * float loop, no boxing, no UDF SerDe), not a Scala UDF. The loop is
+  * written once, as [[VectorKernels.cosine]]: `nullSafeEval` calls it
+  * and `doGenCode` emits a static call to it, so the interpreted and
+  * the generated path run the same arithmetic.
   *
   * Numerics are pinned for oracle parity: dot/norm accumulate
   * SEQUENTIALLY IN FLOAT32 over the array, then widen to double for the
@@ -32,59 +34,18 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_similarity"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects two array<float> columns, got " +
-            s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-    }
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorKernels.checkArrays(this, FloatType, FloatType)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0f; var na = 0.0f; var nb = 0.0f
-    var i = 0
-    while (i < n) {
-      val x = a.getFloat(i)
-      val y = b.getFloat(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    if (na == 0.0f || nb == 0.0f) 0.0
-    else dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.cosine(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |float $dot = 0.0f; float $na = 0.0f; float $nb = 0.0f;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  float $x = $a.getFloat($i);
-         |  float $y = $b.getFloat($i);
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |${ev.value} = ($na == 0.0f || $nb == 0.0f)
-         |  ? 0.0 : ((double) $dot)
-         |      / (java.lang.Math.sqrt((double) $na) * java.lang.Math.sqrt((double) $nb));
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${VectorKernels.Static}.cosine($a, $b)")
 }
 
 /** Plain float32 dot product of two `array<float>` columns — the cheap
@@ -101,48 +62,18 @@ case class DotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects two array<float> columns, got " +
-            s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-    }
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorKernels.checkArrays(this, FloatType, FloatType)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0f
-    var i = 0
-    while (i < n) {
-      dot += a.getFloat(i) * b.getFloat(i)
-      i += 1
-    }
-    dot.toDouble
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.dot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |float $dot = 0.0f;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += $a.getFloat($i) * $b.getFloat($i);
-         |}
-         |${ev.value} = (double) $dot;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${VectorKernels.Static}.dot($a, $b)")
 }
 
 /** Exact micro-long signed projection: Σ_i round(x_i·1e6)·s_i over an
@@ -164,55 +95,83 @@ case class MicroSignedDot(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "micro_signed_dot"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects (array<float>, array<bigint>), got " +
-            s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-    }
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorKernels.checkArrays(this, FloatType, LongType)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): MicroSignedDot =
     copy(left = newLeft, right = newRight)
 
-  private def roundAway(x: Double): Long =
-    if (x >= 0) math.floor(x + 0.5d).toLong else math.ceil(x - 0.5d).toLong
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.microSignedDot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val s = r.asInstanceOf[ArrayData]
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"${VectorKernels.Static}.microSignedDot($a, $b)")
+}
+
+/** The one copy of each vector expression's arithmetic, called by its
+  * `nullSafeEval` and, as a static method, by its generated code. Over
+  * two arrays of different lengths each kernel reads the first
+  * `min(numElements)` elements.
+  */
+private[functions] object VectorKernels {
+
+  /** Java class of the static forwarders that generated code calls. */
+  val Static: String = getClass.getName.stripSuffix("$")
+
+  /** Accepts `(array<l>, array<r>)` children and nothing else. */
+  def checkArrays(e: BinaryExpression, l: DataType, r: DataType): TypeCheckResult =
+    (e.left.dataType, e.right.dataType) match {
+      case (ArrayType(x, _), ArrayType(y, _)) if x == l && y == r =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ =>
+        TypeCheckResult.TypeCheckFailure(
+          s"${e.prettyName} expects (array<${l.catalogString}>, " +
+            s"array<${r.catalogString}>), got " +
+            s"${e.left.dataType.catalogString} / ${e.right.dataType.catalogString}")
+    }
+
+  /** Float32 dot and norms, widened to double for the divide; 0.0 when
+    * either norm is zero.
+    */
+  def cosine(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0f; var na = 0.0f; var nb = 0.0f
+    var i = 0
+    while (i < n) {
+      val x = a.getFloat(i)
+      val y = b.getFloat(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    if (na == 0.0f || nb == 0.0f) 0.0
+    else dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
+  }
+
+  def dot(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0f
+    var i = 0
+    while (i < n) {
+      dot += a.getFloat(i) * b.getFloat(i)
+      i += 1
+    }
+    dot.toDouble
+  }
+
+  /** Σ round(x·1e6)·s in int64, each term rounded half away from zero. */
+  def microSignedDot(a: ArrayData, s: ArrayData): Long = {
     val n = math.min(a.numElements(), s.numElements())
     var acc = 0L
     var i = 0
     while (i < n) {
-      acc += roundAway(a.getFloat(i).toDouble * 1e6) * s.getLong(i)
+      val x = a.getFloat(i).toDouble * 1e6
+      val micro = if (x >= 0) math.floor(x + 0.5d).toLong else math.ceil(x - 0.5d).toLong
+      acc += micro * s.getLong(i)
       i += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, s) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val x = ctx.freshName("x")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $s.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = ((double) $a.getFloat($i)) * 1e6;
-         |  $acc += (long) ($x >= 0
-         |      ? java.lang.Math.floor($x + 0.5d)
-         |      : java.lang.Math.ceil($x - 0.5d)) * $s.getLong($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
 }
 
 object VectorFunctions {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Durable derived-artifact management for the `Shared*` caches (IVF
   * index, bucketed tables): a derived artifact lives next to the corpus
@@ -38,6 +38,21 @@ object Artifacts {
 
   private def monitorFor(p: Path): Object =
     pathMonitors.computeIfAbsent(p.toAbsolutePath.normalize, _ => new Object)
+
+  /** Hex of the first 6 bytes of md5(`dir`): names the artifacts of one
+    * fixture directory.
+    */
+  def fixtureTag(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes(UTF_8)).take(6).map("%02x".format(_)).mkString
+
+  /** Root of the durable artifact `name` derived from the fixture at
+    * `dir`: `<java.io.tmpdir>/graft_<name>_<fixtureTag(dir)><suffix>`,
+    * where `suffix` (such as `_k16`) names build parameters that get a
+    * root of their own.
+    */
+  def fixtureRoot(dir: String, name: String, suffix: String = ""): Path =
+    Paths.get(sys.props("java.io.tmpdir"), s"graft_${name}_${fixtureTag(dir)}$suffix")
 
   /** MD5 fingerprint of the given source files' identity, size and
     * mtime — cheap (no content read), changes whenever the driver

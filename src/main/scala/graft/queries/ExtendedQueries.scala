@@ -38,10 +38,7 @@ object ExtendedQueries extends QueryPack {
     def apply(s: org.apache.spark.sql.SparkSession, dir: String)
         : (String, String) =
       memo(s, dir) {
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        val root = java.nio.file.Paths.get(
-          sys.props("java.io.tmpdir"), s"graft_evpart_$tag")
+        val root = graft.operators.Artifacts.fixtureRoot(dir, "evpart")
         val fp = graft.operators.Artifacts.tableFingerprint(dir, "events") +
           "|layout=events+dim" // layout contents are part of the identity
         graft.operators.Artifacts.ensureBuilt(root, fp) { tmp =>
@@ -70,10 +67,7 @@ object ExtendedQueries extends QueryPack {
     def apply(s: org.apache.spark.sql.SparkSession, dir: String): String =
       memo(s, dir) {
         import graft.functions.Kmv
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        val root = java.nio.file.Paths.get(
-          sys.props("java.io.tmpdir"), s"graft_kmvbank_$tag")
+        val root = graft.operators.Artifacts.fixtureRoot(dir, "kmvbank")
         val fp = graft.operators.Artifacts.tableFingerprint(dir, "events") +
           s"|kmv=${Kmv.K}" // sketch width is part of the identity
         graft.operators.Artifacts.ensureBuilt(root, fp) { tmp =>
@@ -95,10 +89,8 @@ object ExtendedQueries extends QueryPack {
     def apply(s: org.apache.spark.sql.SparkSession, dir: String)
         : (String, String) =
       memo(s, dir) {
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        val root = java.nio.file.Paths.get(
-          sys.props("java.io.tmpdir"), s"graft_bkt_$tag")
+        val tag = graft.operators.Artifacts.fixtureTag(dir)
+        val root = graft.operators.Artifacts.fixtureRoot(dir, "bkt")
         val (liT, ordT) = (s"li_bkt_$tag", s"ord_bkt_$tag")
         val fp = graft.operators.Artifacts
           .tableFingerprint(dir, "lineitem", "orders") +

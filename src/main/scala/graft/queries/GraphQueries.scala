@@ -70,12 +70,8 @@ object GraphQueries extends QueryPack {
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .groupBy("src", "dst").agg(count(lit(1)).as("w"))
 
-    private def root(dir: String): java.nio.file.Path = {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-      java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_edges_${tag}_b$MaxBasket")
-    }
+    private def root(dir: String): java.nio.file.Path =
+      graft.operators.Artifacts.fixtureRoot(dir, "edges", s"_b$MaxBasket")
 
     /** The canonical pair table, served from a DURABLE artifact: the
       * lineitem basket collapse (the graph family's dominant cost —

@@ -343,12 +343,8 @@ object VectorQueries extends QueryPack {
       * This is the 100 TB operational shape: an IVF index is a durable
       * artifact next to the corpus, not per-process scratch.
       */
-    private[graft] def indexRoot(dir: String): java.nio.file.Path = {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-      java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_ivf_${tag}_k$K")
-    }
+    private[graft] def indexRoot(dir: String): java.nio.file.Path =
+      graft.operators.Artifacts.fixtureRoot(dir, "ivf", s"_k$K")
 
     def apply(s: org.apache.spark.sql.SparkSession, dir: String): Index =
       memo(s, dir) {
@@ -401,10 +397,7 @@ object VectorQueries extends QueryPack {
       memo(s, dir) {
         val ix = SharedIvfIndex(s, dir)
         val cb = SharedPqCodebook(s, dir)
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-        val root = java.nio.file.Paths.get(
-          sys.props("java.io.tmpdir"), s"graft_ivfpq_$tag")
+        val root = graft.operators.Artifacts.fixtureRoot(dir, "ivfpq")
         val fp = graft.operators.Artifacts.tableFingerprint(dir, "embeddings") +
           s"|ivfk=${SharedIvfIndex.K}|m=${cb.m}|ksub=${cb.ksub}|iters=4"
         graft.operators.Artifacts.ensureBuilt(root, fp) { tmp =>
@@ -435,12 +428,8 @@ object VectorQueries extends QueryPack {
     final case class Index(centroids: Seq[(Int, Seq[Float])], path: String)
     private val memo = new SessionMemo[String, Index]()
 
-    private def root(dir: String): java.nio.file.Path = {
-      val tag = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-      java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"graft_ivfapp_${tag}_k${SharedIvfIndex.K}")
-    }
+    private def root(dir: String): java.nio.file.Path =
+      graft.operators.Artifacts.fixtureRoot(dir, "ivfapp", s"_k${SharedIvfIndex.K}")
 
     def apply(s: org.apache.spark.sql.SparkSession, dir: String): Index =
       memo(s, dir) {

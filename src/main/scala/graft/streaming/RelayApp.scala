@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkEntry
 
 /** Runnable relay with the reference's exact configuration surface
   * (env vars + defaults, /root/reference/main.go:28-79):
@@ -65,14 +65,8 @@ object RelayApp {
 
   def main(args: Array[String]): Unit = {
     val cfg = RelayConfig.fromEnv()
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _).toSeq: _*)
     val srcDir = cfg.sourceDir.getOrElse(
       sys.error("SOURCE_DIR must point at a change-event JSON directory " +
         "(connector-free local mode; Mongo connector jar not on classpath)"))

@@ -51,6 +51,53 @@ class DedupSimilaritySpec extends SparkSpec {
       .select(cosine_similarity(typedLit(a), typedLit(b)).as("c"))
       .head().getDouble(0)
     assert(math.abs(got - cos(a, b)) < 1e-12)
+
+    // the three kernels over columns (two literals fold through the
+    // interpreted path only), once generated and once interpreted
+    import spark.implicits._
+    import graft.functions.VectorFunctions.{dot_product, micro_signed_dot}
+    def roundAway(x: Double): Long =
+      if (x >= 0) math.floor(x + 0.5).toLong else math.ceil(x - 0.5).toLong
+    val signs = a.indices.map(i => if (i % 3 == 0) -1L else 1L)
+    // terms whose x·1e6 sits just inside and just past ±0.5
+    val micro = Seq(4.9e-7f, 5.1e-7f, -4.9e-7f, -5.1e-7f, 1.49e-6f, -2.51e-6f)
+    val cases: Seq[(Int, Option[Seq[Float]], Option[Seq[Float]], Option[Seq[Long]])] =
+      Seq(
+        (0, Some(a), Some(b), Some(signs)),
+        (1, Some(Seq(0f, 0f, 0f)), Some(Seq(1f, 2f, 3f)), Some(Seq(1L, 1L, 1L))),
+        (2, Some(Seq(1f, 2f, 3f)), Some(Seq(4f, -5f, 6f, 7f, 8f)), Some(Seq(1L, -1L))),
+        (3, None, Some(Seq(1f)), None)) ++
+      micro.zipWithIndex.map { case (x, i) =>
+        (4 + i, Some(Seq(x)), Some(Seq(x)), Some(Seq(if (i % 2 == 0) 1L else -1L))) }
+    val kernels = cases.toDF("id", "a", "b", "s").repartition(2).select(col("id"),
+      cosine_similarity(col("a"), col("b")),
+      dot_product(col("a"), col("b")),
+      micro_signed_dot(col("a"), col("s")))
+    def run(conf: (String, String)*): Seq[Seq[Any]] = {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try kernels.collect().toSeq.sortBy(_.getInt(0)).map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case v => v
+      }) finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    val generated = run("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val interpreted = run("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    assert(generated.size === cases.size)
+    assert(interpreted === generated)
+    def double(row: Int, i: Int): Double =
+      java.lang.Double.longBitsToDouble(generated(row)(i).asInstanceOf[Long])
+    assert(math.abs(double(0, 1) - cos(a, b)) < 1e-12)
+    assert(double(1, 1) === 0.0) // zero norm
+    assert(double(2, 2) === 12.0) // 4 - 10 + 18: the first min(3, 5) terms
+    assert(generated(2)(3) === -1000000L) // round(1e6) - round(2e6): min(3, 2) terms
+    assert(generated(3).drop(1) === Seq(null, null, null))
+    micro.zipWithIndex.foreach { case (x, i) =>
+      val expect = roundAway(x.toDouble * 1e6) * (if (i % 2 == 0) 1L else -1L)
+      assert(generated(4 + i)(3) === expect, s"micro term $x")
+    }
+    assert(micro.take(4).map(x => roundAway(x.toDouble * 1e6)) === Seq(0L, 1L, 0L, -1L))
   }
 
   test("brute-force kNN returns the exact top-k (validated by full sort)") {

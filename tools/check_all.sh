@@ -15,6 +15,9 @@ done
 # library code does not change its caller's session settings
 ! grep -rn 'conf\.set(' src/main \
   || { echo "src/main calls conf.set( on a caller's session" >&2; exit 1; }
+# every main builds its session through SparkEntry.localSession
+! grep -rn 'SparkSession\.builder' src/main --exclude=SparkEntry.scala \
+  || { echo "src/main builds a SparkSession outside SparkEntry.scala" >&2; exit 1; }
 
 sbt -batch clean test
 
