@@ -46,7 +46,8 @@ object Bucketing {
     // the check covers bucket AND sort columns, location, and the
     // current files' schema, so a stale entry (fixture schema changed at
     // the same path) refreshes instead of silently serving old metadata.
-    val fileSchema = spark.read.parquet(path).schema
+    // The files' schema comes from a footer read, with no Spark job.
+    val fileSchema = graft.Tables.readParquet(spark, path).schema
     val cat = spark.sessionState.catalog
     val id = org.apache.spark.sql.catalyst.TableIdentifier(table)
     if (cat.tableExists(id)) {

@@ -15,6 +15,9 @@ done
 # library code does not change its caller's session settings
 ! grep -rn 'conf\.set(' src/main \
   || { echo "src/main calls conf.set( on a caller's session" >&2; exit 1; }
+# a schema is read from a footer, not learned by a Spark inference job
+! grep -rnE 'read\.parquet\([^)]*\)\.schema' src/main \
+  || { echo "src/main runs a Spark job only to learn a parquet schema" >&2; exit 1; }
 # every main builds its session through SparkEntry.localSession
 ! grep -rn 'SparkSession\.builder' src/main --exclude=SparkEntry.scala \
   || { echo "src/main builds a SparkSession outside SparkEntry.scala" >&2; exit 1; }
