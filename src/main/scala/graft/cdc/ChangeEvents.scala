@@ -78,11 +78,16 @@ object ChangeEvents {
     df.filter(col("operationType").isin(DocumentOps: _*))
 
   /** The complement of [[opFilter]] plus parse failures — the events the
-    * reference would crash on or silently drop (SURVEY.md §2.2).
+    * reference would crash on or silently drop (SURVEY.md §2.2) — with
+    * the reason appended as `dead_letter_reason`:
+    * `unsupported operationType: <op>` or `missing operationType`.
     */
   def deadLetter(df: DataFrame): DataFrame =
     df.filter(!col("operationType").isin(DocumentOps: _*) ||
       col("operationType").isNull)
+      .withColumn("dead_letter_reason",
+        coalesce(concat(lit("unsupported operationType: "), col("operationType")),
+          lit("missing operationType")))
 
   /** Parse raw change-event JSON lines (the file-based stand-in for the
     * change-stream wire format) into the typed envelope, one

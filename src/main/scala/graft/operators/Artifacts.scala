@@ -3,6 +3,9 @@ package graft.operators
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
+
 /** Durable derived-artifact management for the `Shared*` caches (IVF
   * index, bucketed tables): a derived artifact lives next to the corpus
   * under a deterministic root, is rebuilt only when the SOURCE data
@@ -26,6 +29,12 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *    per-lock-file monitor prevents the same process from overlapping
   *    its own file lock (which would throw) while letting UNRELATED
   *    artifacts build concurrently.
+  *
+  * The same swap publishes the streaming sinks' parquet SNAPSHOTS
+  * (MergeSink, AggSink, SketchBankSink, [[Compaction]]): each reads
+  * through [[readSnapshot]] and replaces through [[publish]], both under
+  * [[withDirLock]] — the replace-by-swap that makes a replayed epoch an
+  * idempotent overwrite.
   */
 object Artifacts {
 
@@ -118,9 +127,10 @@ object Artifacts {
   }
 
   /** Serialize mutators of the directory `dir` within and across JVMs —
-    * the writer-exclusion contract shared by the streaming MERGE sink
-    * and [[Compaction.compact]], so a compaction can never lose a file a
-    * concurrent micro-batch appended between its snapshot and its swap.
+    * the writer-exclusion contract shared by the streaming sinks
+    * (MergeSink, AggSink, SketchBankSink) and [[Compaction.compact]], so
+    * a compaction can never lose a file a concurrent micro-batch
+    * appended between its snapshot and its swap.
     */
   def withDirLock[A](dir: Path)(body: => A): A = {
     val abs = dir.toAbsolutePath.normalize
@@ -156,6 +166,30 @@ object Artifacts {
       Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(next, target, StandardCopyOption.ATOMIC_MOVE)
     deleteRecursively(old)
+  }
+
+  /** The swap-managed parquet snapshot at `dir` after [[recoverSwap]],
+    * or an empty frame of `schema` when none has been published yet.
+    * Call under [[withDirLock]].
+    */
+  def readSnapshot(spark: SparkSession, dir: Path, schema: StructType): DataFrame = {
+    recoverSwap(dir)
+    if (Files.exists(dir)) spark.read.parquet(dir.toString)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  }
+
+  /** Replace the snapshot at `dir` with what `write` puts in the sibling
+    * `<dir>.next`, through [[swapInto]]. A stale `.next` a crashed writer
+    * left is deleted first; if `write` throws, `.next` is deleted and
+    * `dir` is left untouched. Call under [[withDirLock]].
+    */
+  def publish(dir: Path)(write: Path => Unit): Unit = {
+    val next = dir.resolveSibling(s"${dir.getFileName}.next")
+    deleteRecursively(next)
+    try {
+      write(next)
+      swapInto(dir, next)
+    } finally deleteRecursively(next) // no-op if the move happened
   }
 
   /** Repair the one non-atomic [[swapInto]] window: if a crash left

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * read without touching data pages), so the only full pass over the
   * data is the rewrite itself. The rewrite is one narrow job: read →
   * `repartition(ceil(rows / rowsPerFile))` → write to a temp sibling →
-  * crash-safe swap ([[Artifacts.swapInto]]: the previous version is
+  * crash-safe swap ([[Artifacts.publish]]: the previous version is
   * renamed aside, never deleted before the new one is in place). A
   * round-robin repartition is deliberate: compaction must not assume
   * any key, and the exchange it pays is the point of the operation (it
@@ -74,17 +74,15 @@ object Compaction {
       val before = parquetFiles(dir)
       val rows = footerRows(spark, before)
       val target = math.max(1, math.ceil(rows.toDouble / rowsPerFile).toInt)
-      val next = java.nio.file.Paths.get(path + ".compact")
-      spark.read.parquet(path)
-        .repartition(target).write.mode("overwrite").parquet(next.toString)
-      val rewritten = footerRows(spark, parquetFiles(next))
-      if (rewritten != rows) {
-        Artifacts.deleteRecursively(next)
-        throw new IllegalStateException(
-          s"compaction of $path rewrote $rewritten rows but snapshot had " +
-            s"$rows; aborting before swap (original left untouched)")
+      Artifacts.publish(dir) { next =>
+        spark.read.parquet(path)
+          .repartition(target).write.mode("overwrite").parquet(next.toString)
+        val rewritten = footerRows(spark, parquetFiles(next))
+        if (rewritten != rows)
+          throw new IllegalStateException(
+            s"compaction of $path rewrote $rewritten rows but snapshot had " +
+              s"$rows; aborting before swap (original left untouched)")
       }
-      Artifacts.swapInto(dir, next)
       (before.size, parquetFiles(dir).size)
     }
   }

@@ -35,6 +35,29 @@ import org.apache.spark.sql.functions._
   */
 object WeightedQuantile {
 
+  /** Lineage truncation on the TINY per-group frames both operators build
+    * (bounds, cut buckets, prefixes: groups × qs rows at most). Without
+    * it `bounds` is re-derived by every subtree that references it and
+    * the FACT TABLE is re-scanned multiplicatively — measured: 22
+    * lineitem scans in agg_weighted_median_bucketed's plan and ~17 when
+    * exactPercentiles calls COMPOSE (ts_anomaly_mad), where 3 is what the
+    * three-pass algorithm needs. A lazy local checkpoint materializes
+    * each small frame once on first use; losing one (executor loss)
+    * recomputes a tiny aggregate, never correctness.
+    */
+  private def tiny(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+
+  /** Deterministic monotone bucketization of `value` into `buckets`
+    * buckets over the joined group bounds `mn`/`mx`: the mx row clamps
+    * into the last bucket, a degenerate (single-value) group collapses
+    * into bucket 0.
+    */
+  private def bucketOf(value: Column, buckets: Int): Column = least(
+    lit(buckets - 1),
+    floor((value - col("mn")) * buckets /
+      when(col("mx") > col("mn"), col("mx") - col("mn")).otherwise(lit(1)))
+      .cast("int"))
+
   /** Lower weighted q-quantile of `valueCol` under `weightCol` per
     * `groupCol`: the smallest value v with cumWeight(≤ v) ≥ q·totalWeight.
     * Output: (groupCol, w_quantile, total_weight).
@@ -50,30 +73,12 @@ object WeightedQuantile {
     val v = col(valueCol)
     val w = col(weightCol)
 
-    // Lineage truncation on the TINY per-group frames (one row per group
-    // / per surviving bucket) — the exactPercentiles move: without it,
-    // `bounds` is re-derived by every subtree that references `bucketed`
-    // or `scanned` and the FACT TABLE is re-scanned multiplicatively
-    // (measured: 22 lineitem scans in agg_weighted_median_bucketed's
-    // plan; 3 is what the three-pass algorithm needs). Losing a lazy
-    // local checkpoint (executor loss) recomputes a tiny aggregate,
-    // never correctness.
-    def tiny(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
-
     // pass A: group bounds + totals (tiny: one row per group)
     val bounds = tiny(df.groupBy(g).agg(
       min(v).as("mn"), max(v).as("mx"), sum(w).as("totw")))
 
-    // deterministic monotone bucketization; mx row clamps into the last
-    // bucket, a degenerate (single-value) group collapses into bucket 0
-    def bucketOf(value: Column): Column = least(
-      lit(buckets - 1),
-      floor((value - col("mn")) * buckets /
-        when(col("mx") > col("mn"), col("mx") - col("mn")).otherwise(lit(1)))
-        .cast("int"))
-
     val bucketed = df.join(broadcast(bounds), Seq(groupCol))
-      .withColumn("bkt", bucketOf(v))
+      .withColumn("bkt", bucketOf(v, buckets))
 
     // pass B: the compact histogram; cut bucket + prefix from ≤ buckets rows
     val hist = bucketed.groupBy(g, col("bkt")).agg(sum(w).as("hw"))
@@ -160,16 +165,6 @@ object WeightedQuantile {
     val in0 = df.select(g, v)
     val in = in0.filter(v.isNotNull)
 
-    // Lineage truncation on the TINY per-group frames (groups × qs rows):
-    // without it, `bounds` appears three times in the final plan and
-    // `cuts` twice, and when calls COMPOSE (ts_anomaly_mad feeds one
-    // percentile's output into the next one's input) the input subtree
-    // re-executes multiplicatively — ~17 fact scans instead of the 3 the
-    // algorithm needs. Lazy local checkpoints materialize each small
-    // frame once on first use; losing one (executor loss) costs a
-    // recompute of a tiny aggregate, never correctness.
-    def tiny(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
-
     // pass A: bounds + per-q target ranks (tiny: groups × qs rows).
     // count(v)/min(v)/max(v) all skip nulls, so scanning in0 gets the
     // all-null groups' keys (n=0, mn/mx NULL) in the same single pass.
@@ -216,14 +211,8 @@ object WeightedQuantile {
       .select(g, explode(array(col("k_lo"), col("k_hi"))).as("k"))
       .distinct()
 
-    def bucketOf(value: Column): Column = least(
-      lit(buckets - 1),
-      floor((value - col("mn")) * buckets /
-        when(col("mx") > col("mn"), col("mx") - col("mn")).otherwise(lit(1)))
-        .cast("int"))
-
     val bucketed = in.join(broadcast(bounds), Seq(groupCol))
-      .withColumn("bkt", bucketOf(v))
+      .withColumn("bkt", bucketOf(v, buckets))
 
     // pass B: count histogram; a bucket is CUT iff it straddles a target
     // rank (pre ≤ k < cum) — at most 2·|qs| buckets per group survive.

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Graph analytics over the co-purchase graph (parts linked when they
   * appear in the same order) — the relational-to-graph bridge a training
@@ -51,7 +50,7 @@ object GraphQueries extends QueryPack {
     * collapse from lineitem — 2× the fact scans for identical pairs.)
     */
   private object SharedWeightedPairs {
-    private val memo = new SessionMemo[String, DataFrame](SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[String]
 
     /** The basket-collapse + in-row pair-generation plan — the expensive
       * lineitem pass. Runs ONLY inside the artifact build; the query
@@ -97,7 +96,6 @@ object GraphQueries extends QueryPack {
         // shuffles by the label-propagation keys), so hash-distributing
         // the canonical pairs here was one wasted shuffle per pin build
         s.read.parquet(r.resolve("pairs").toString)
-          .persist(StorageLevel.MEMORY_AND_DISK)
       }
   }
 
@@ -108,13 +106,13 @@ object GraphQueries extends QueryPack {
     * iterative consumers never rebuild it.
     */
   private object SharedEdges {
-    private val memo = new SessionMemo[String, DataFrame](SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[String]
     def apply(s: SparkSession, dir: String): DataFrame =
       memo(s, dir) {
         val wp = SharedWeightedPairs(s, dir).select("src", "dst")
         val pairs = wp.unionByName(
           wp.select(col("dst").as("src"), col("src").as("dst")))
-        pairs.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+        pairs.repartition(col("src"))
       }
   }
 
@@ -126,11 +124,10 @@ object GraphQueries extends QueryPack {
     * pin is small at any corpus scale.
     */
   private object SharedDegrees {
-    private val memo = new SessionMemo[String, DataFrame](SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[String]
     def apply(s: SparkSession, dir: String): DataFrame =
       memo(s, dir) {
         SharedEdges(s, dir).groupBy("src").agg(count(lit(1)).as("outdeg"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
       }
   }
 

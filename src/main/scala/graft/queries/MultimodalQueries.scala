@@ -243,13 +243,11 @@ object MultimodalQueries extends QueryPack {
     * still run per query. Bounded: one pin per fixture dir ever touched.
     */
   private object SharedMedia {
-    private val memo = new SessionMemo[String, org.apache.spark.sql.DataFrame](
-      SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[String]
     def apply(s: org.apache.spark.sql.SparkSession, dir: String)
         : org.apache.spark.sql.DataFrame =
       memo(s, dir)(
-        Multimodal.fakeMediaFromDocs(graft.Tables.table(s, dir, "documents"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        Multimodal.fakeMediaFromDocs(graft.Tables.table(s, dir, "documents")))
   }
 
   /** The twin-augmented media frame for the near-dup pair demo,
@@ -258,8 +256,7 @@ object MultimodalQueries extends QueryPack {
     * measurement (the DECODE + hash + band join still run per query).
     */
   private object SharedMediaWithTwins {
-    private val memo = new SessionMemo[String, org.apache.spark.sql.DataFrame](
-      SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[String]
     def apply(s: org.apache.spark.sql.SparkSession, dir: String)
         : org.apache.spark.sql.DataFrame =
       memo(s, dir) {
@@ -268,7 +265,6 @@ object MultimodalQueries extends QueryPack {
         val base = SharedMedia(s, dir)
         Multimodal.withBrightenedTwins(base, delta = 8,
             twinOffset = Multimodal.twinOffsetFor(base))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
   }
 
@@ -277,8 +273,7 @@ object MultimodalQueries extends QueryPack {
     * expensive part, shared across the pair query's passes).
     */
   private object SharedAudioWithTwins {
-    private val memo = new SessionMemo[String, org.apache.spark.sql.DataFrame](
-      SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[String]
     def apply(s: org.apache.spark.sql.SparkSession, dir: String)
         : org.apache.spark.sql.DataFrame =
       memo(s, dir) {
@@ -289,7 +284,6 @@ object MultimodalQueries extends QueryPack {
         val base = SharedMedia(s, dir).filter(col("kind") === "audio")
         Multimodal.withScaledAudioTwins(base, num = 7, den = 8,
             twinOffset = Multimodal.twinOffsetFor(base))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
   }
 
@@ -298,15 +292,13 @@ object MultimodalQueries extends QueryPack {
     * only the video rows are read from this pin).
     */
   private object SharedVideoWithTwins {
-    private val memo = new SessionMemo[String, org.apache.spark.sql.DataFrame](
-      SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[String]
     def apply(s: org.apache.spark.sql.SparkSession, dir: String)
         : org.apache.spark.sql.DataFrame =
       memo(s, dir) {
         val base = SharedMedia(s, dir).filter(col("kind") === "video")
         Multimodal.withScaledVideoTwins(base, num = 7, den = 8,
             twinOffset = Multimodal.twinOffsetFor(base))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
   }
 

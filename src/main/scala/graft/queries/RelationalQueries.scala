@@ -41,8 +41,7 @@ object RelationalQueries extends QueryPack {
     * repeats verbatim.
     */
   private object SharedPartsupp {
-    private val memo = new SessionMemo[String, DataFrame](
-      SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[String]
     def apply(s: SparkSession, dir: String): DataFrame = memo(s, dir)(
       graft.Tables.table(s, dir, "lineitem")
         .select("l_partkey", "l_suppkey").distinct()
@@ -51,8 +50,7 @@ object RelationalQueries extends QueryPack {
           col("l_suppkey").as("ps_suppkey"),
           (((col("l_partkey") * 31 + col("l_suppkey") * 17) % 10000) / lit(100.0) + lit(1.0))
             .as("ps_supplycost"),
-          ((col("l_partkey") * 7 + col("l_suppkey") * 11) % 9999 + 1).as("ps_availqty"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          ((col("l_partkey") * 7 + col("l_suppkey") * 11) % 9999 + 1).as("ps_availqty")))
   }
 
   /** The memoized-and-pinned synthesized table (six queries derive from

@@ -6,10 +6,16 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** A per-SparkSession memo with automatic eviction — the shared backing
   * for every `Shared*` fixture/index cache in the query packs.
+  * Driver-side values (codebooks, merge tables, paths) use a plain
+  * `new SessionMemo`; shared DataFrames use [[SessionMemo.frames]], the
+  * one owner of the pin policy (persist, unpersist on eviction, drop in
+  * [[SessionMemo.evictAll]]), so no query names a storage level or an
+  * evictor.
   *
   * The round-3 memos were plain `TrieMap`s keyed on
   * `identityHashCode(session)`: bounded per fixture, fine for bench/
@@ -51,15 +57,23 @@ import org.apache.spark.sql.SparkSession
   * evictors must be idempotent (unpersist and delete-if-exists are; a
   * refcount decrement would not be).
   */
-final class SessionMemo[K, V](
-    onEvict: V => Unit = (_: V) => (),
+final class SessionMemo[K, V] private (
+    onEvict: V => Unit,
     /** True for memos whose values PIN EXECUTOR STORAGE (persisted
       * DataFrames): only these participate in [[SessionMemo.evictAll]] —
       * driver-side-only values (codebooks, merge tables, paths, probe
       * vectors) occupy no storage pool, so evicting them between bench
       * families would buy nothing and cost a rebuild.
       */
-    val pinsExecutorStorage: Boolean = false) {
+    val pinsExecutorStorage: Boolean,
+    /** Applied once to each computed value before it is stored
+      * ([[SessionMemo.frames]] persists it here).
+      */
+    pin: V => V) {
+
+  def this(onEvict: V => Unit = (_: V) => (),
+      pinsExecutorStorage: Boolean = false) =
+    this(onEvict, pinsExecutorStorage, (v: V) => v)
 
   /** Lazily-forced value cell: at most one compute, evictable only if
     * actually forced. (An eviction racing a thread inside `compute`
@@ -107,7 +121,7 @@ final class SessionMemo[K, V](
     val tag = tagOf(s)
     sessions.putIfAbsent(tag, new WeakReference(s))
     val k = (tag, key)
-    val cell = entries.getOrElseUpdate(k, new Cell(() => compute))
+    val cell = entries.getOrElseUpdate(k, new Cell(() => pin(compute)))
     val v = cell.value
     // An evict()/sweep() racing this thread inside `compute` removes the
     // entry while the compute still finishes — without this re-check the
@@ -180,8 +194,16 @@ object SessionMemo {
     * plan if its context is still alive (a stopped context already
     * dropped every cached block).
     */
-  val unpersistDf: org.apache.spark.sql.DataFrame => Unit = df =>
+  val unpersistDf: DataFrame => Unit = df =>
     if (!df.sparkSession.sparkContext.isStopped) df.unpersist(blocking = false)
+
+  /** A memo of shared per-fixture frames: each computed frame is
+    * persisted at `MEMORY_AND_DISK`, unpersisted ([[unpersistDf]]) on
+    * eviction, and dropped by [[evictAll]].
+    */
+  def frames[K]: SessionMemo[K, DataFrame] =
+    new SessionMemo[K, DataFrame](unpersistDf, pinsExecutorStorage = true,
+      _.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Weak registry of every memo instance, so a harness can drop ALL of a
     * session's pins at once without knowing which query packs exist.

@@ -114,14 +114,11 @@ object TextQueries extends QueryPack {
     * call count (a per-call pin would leak one plan per call).
     */
   private object SharedShingleIndex {
-    private val memo =
-      new SessionMemo[(String, Int), org.apache.spark.sql.DataFrame](
-        SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[(String, Int)]
     def apply(s: org.apache.spark.sql.SparkSession, dir: String, n: Int)
         : org.apache.spark.sql.DataFrame =
       memo(s, (dir, n))(
-        Dedup.shingleIndex(graft.Tables.table(s, dir, "documents"), "doc_id", "text", n)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        Dedup.shingleIndex(graft.Tables.table(s, dir, "documents"), "doc_id", "text", n))
   }
 
   /** Postings count of the deterministic 20% "new batch" slice of the
@@ -168,14 +165,11 @@ object TextQueries extends QueryPack {
     * own label-propagation rounds, not a repeat of the pair pipeline.
     */
   private object SharedJaccardPairs {
-    private val memo =
-      new SessionMemo[(String, Int, Double), org.apache.spark.sql.DataFrame](
-        SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[(String, Int, Double)]
     def apply(s: org.apache.spark.sql.SparkSession, dir: String, n: Int,
         minJaccard: Double): org.apache.spark.sql.DataFrame =
       memo(s, (dir, n, minJaccard))(
-        Dedup.jaccardPairsFromIndex(SharedShingleIndex(s, dir, n), minJaccard)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        Dedup.jaccardPairsFromIndex(SharedShingleIndex(s, dir, n), minJaccard))
   }
 
   /** MinHash signature table (doc_id, mh0..mh{k-1}) derived from the
@@ -194,8 +188,7 @@ object TextQueries extends QueryPack {
     * every per-doc sum downstream is exact integer arithmetic.
     */
   private object SharedBigramScores {
-    private val memo = new SessionMemo[String, org.apache.spark.sql.DataFrame](
-      SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[String]
     def apply(s: org.apache.spark.sql.SparkSession, dir: String)
         : org.apache.spark.sql.DataFrame =
       memo(s, dir) {
@@ -206,7 +199,6 @@ object TextQueries extends QueryPack {
         // the dict); BigramLm.scores(minCount > 1) is the shipped lever
         // when a real corpus's bigram vocab outgrows broadcast size
         graft.text.BigramLm.scores(base, minCount = 1L)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
   }
 
@@ -253,8 +245,7 @@ object TextQueries extends QueryPack {
   private object SharedQualityModels {
     private val nbMemo = new SessionMemo[String, graft.text.QualityModel.Model]()
     private val lrMemo = new SessionMemo[String, graft.text.QualityModel.Model]()
-    private val docsMemo = new SessionMemo[String, org.apache.spark.sql.DataFrame](
-      SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val docsMemo = SessionMemo.frames[String]
 
     /** Tokenized+labeled+augmented frame, pinned: NB fit (two passes),
       * LR refinement, and both scoring queries all read it — unpinned,
@@ -266,8 +257,7 @@ object TextQueries extends QueryPack {
         graft.Tables.table(s, dir, "documents")
           .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
           .withColumn("label", QualityModel.weakLabel(col("toks")))
-          .withColumn("ftoks", QualityModel.featureTokens(col("toks")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .withColumn("ftoks", QualityModel.featureTokens(col("toks"))))
 
     def nb(s: org.apache.spark.sql.SparkSession, dir: String)
         : graft.text.QualityModel.Model =
@@ -494,14 +484,11 @@ object TextQueries extends QueryPack {
   }
 
   private object SharedMinHashSigs {
-    private val memo =
-      new SessionMemo[(String, Int, Int), org.apache.spark.sql.DataFrame](
-        SessionMemo.unpersistDf, pinsExecutorStorage = true)
+    private val memo = SessionMemo.frames[(String, Int, Int)]
     def apply(s: org.apache.spark.sql.SparkSession, dir: String, n: Int, k: Int)
         : org.apache.spark.sql.DataFrame =
       memo(s, (dir, n, k))(
-        Dedup.minHashSignaturesFromIndex(SharedShingleIndex(s, dir, n), k)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        Dedup.minHashSignaturesFromIndex(SharedShingleIndex(s, dir, n), k))
   }
 
   /** `text_tfidf` body, parameterized on the vocabulary broadcast cap so

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Artifacts
+
 /** `foreachBatch` incremental-aggregate sink — the streaming half of the
   * batch `cdc_incr_agg` query: a `SUM(value)/COUNT(*) GROUP BY group`
   * view maintained purely from change deltas, never recomputed from the
@@ -24,7 +26,7 @@ import org.apache.spark.sql.functions._
   * before the rename, making the fold and its epoch one atomic publish
   * (Spark's parquet reader ignores `_`-prefixed files). Both snapshots
   * publish via the same crash-safe rename
-  * ([[graft.operators.Artifacts.swapInto]]), state LAST: a replay after
+  * ([[graft.operators.Artifacts.publish]]), state LAST: a replay after
   * a crash between the two swaps sees its own batchId already folded,
   * skips the double-fold, and redoes only the idempotent state upsert.
   *
@@ -48,9 +50,8 @@ object AggSink {
       valueCol: String, opCol: String, deleteOp: String): Unit = {
     val statePath = java.nio.file.Paths.get(stateDir)
     val aggPath = java.nio.file.Paths.get(aggDir)
-    graft.operators.Artifacts.withDirLock(aggPath) {
-      graft.operators.Artifacts.recoverSwap(statePath)
-      graft.operators.Artifacts.recoverSwap(aggPath)
+    Artifacts.withDirLock(aggPath) {
+      Artifacts.recoverSwap(aggPath)
       val epochFile = aggPath.resolve("_EPOCH")
       val applied =
         if (java.nio.file.Files.exists(epochFile))
@@ -59,24 +60,18 @@ object AggSink {
       // batchId < applied ⇒ a LATER epoch already folded, which implies
       // this epoch's state upsert also completed (state publishes before
       // the next epoch can run) — nothing to do
-      if (batchId >= applied) applyOnce(spark, statePath, stateDir, aggPath,
-        aggDir, batch, batchId, applied, keyCol, grpCol, valueCol, opCol,
-        deleteOp)
+      if (batchId >= applied) applyOnce(spark, statePath, aggPath, batch,
+        batchId, applied, keyCol, grpCol, valueCol, opCol, deleteOp)
     }
   }
 
-  private def applyOnce(spark: SparkSession,
-      statePath: java.nio.file.Path, stateDir: String,
-      aggPath: java.nio.file.Path, aggDir: String, batch: DataFrame,
-      batchId: Long, applied: Long, keyCol: String, grpCol: String,
-      valueCol: String, opCol: String, deleteOp: String): Unit = {
+  private def applyOnce(spark: SparkSession, statePath: java.nio.file.Path,
+      aggPath: java.nio.file.Path, batch: DataFrame, batchId: Long,
+      applied: Long, keyCol: String, grpCol: String, valueCol: String,
+      opCol: String, deleteOp: String): Unit = {
       val stateCols = Seq(keyCol, grpCol, valueCol)
-      val state =
-        if (java.nio.file.Files.exists(statePath))
-          spark.read.parquet(stateDir)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          batch.select(stateCols.map(col): _*).schema)
+      val state = Artifacts.readSnapshot(spark, statePath,
+        batch.select(stateCols.map(col): _*).schema)
 
       if (batchId > applied) { // skip the non-idempotent fold on replay
         // old images of exactly the touched keys (delta-bounded)
@@ -88,12 +83,9 @@ object AggSink {
         val deltas = retract.unionByName(add)
           .groupBy("g").agg(sum("dv").as("dv"), sum("dn").as("dn"))
 
-        val agg =
-          if (java.nio.file.Files.exists(aggPath)) spark.read.parquet(aggDir)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            deltas.select(col("g"), col("dv").as("sum_value"), col("dn").as("n"))
-              .schema)
+        val agg = Artifacts.readSnapshot(spark, aggPath,
+          deltas.select(col("g"), col("dv").as("sum_value"), col("dn").as("n"))
+            .schema)
         val merged = agg.join(deltas, Seq("g"), "full_outer")
           .select(col("g"),
             (coalesce(col("sum_value"), lit(0.0)) + coalesce(col("dv"), lit(0.0)))
@@ -101,11 +93,11 @@ object AggSink {
             (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"))
           .filter(col("n") > 0) // a fully-retracted group leaves the view
 
-        val nextAgg = java.nio.file.Paths.get(aggDir + ".next")
-        merged.write.mode("overwrite").parquet(nextAgg.toString)
-        // epoch travels INSIDE the snapshot: fold + marker publish atomically
-        java.nio.file.Files.writeString(nextAgg.resolve("_EPOCH"), batchId.toString)
-        graft.operators.Artifacts.swapInto(aggPath, nextAgg)
+        Artifacts.publish(aggPath) { next =>
+          merged.write.mode("overwrite").parquet(next.toString)
+          // epoch travels INSIDE the snapshot: fold + marker publish atomically
+          java.nio.file.Files.writeString(next.resolve("_EPOCH"), batchId.toString)
+        }
       }
 
       // idempotent keyed-state upsert, LAST (see exactly-once note above);
@@ -113,8 +105,7 @@ object AggSink {
       val nextState = state.join(batch.select(keyCol), Seq(keyCol), "left_anti")
         .unionByName(batch.filter(col(opCol) =!= deleteOp)
           .select(stateCols.map(col): _*))
-      val nextStatePath = java.nio.file.Paths.get(stateDir + ".next")
-      nextState.write.mode("overwrite").parquet(nextStatePath.toString)
-      graft.operators.Artifacts.swapInto(statePath, nextStatePath)
+      Artifacts.publish(statePath)(next =>
+        nextState.write.mode("overwrite").parquet(next.toString))
   }
 }

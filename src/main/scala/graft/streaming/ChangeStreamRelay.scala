@@ -51,15 +51,6 @@ object ChangeStreamRelay {
   /** The relay transform on an already-parsed envelope stream. */
   def relay(envelope: DataFrame): DataFrame = ChangeEvents.relay(envelope)
 
-  /** Events the reference would crash on (`invalidate`, `drop*`, …) or
-    * silently lose — routed to a side sink instead.
-    */
-  def deadLetterStream(envelope: DataFrame): DataFrame =
-    ChangeEvents.deadLetter(envelope)
-      .withColumn("dead_letter_reason",
-        coalesce(concat(lit("unsupported operationType: "), col("operationType")),
-          lit("missing operationType")))
-
   /** Streaming replay-dedup: at-least-once upstream ⇒ exactly-once
     * downstream within the watermark horizon. Dedups on the EVENT identity
     * (`_id`, the resume token) — never the document key: change streams

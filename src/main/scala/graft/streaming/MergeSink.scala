@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Artifacts
+
 /** `foreachBatch` MERGE sink — the streaming half of the batch
   * `cdc_merge_apply` query: each micro-batch of latest-state updates is
   * folded into a parquet snapshot (upsert on document ops, DELETE on
@@ -30,19 +32,12 @@ object MergeSink {
     // writer exclusion shared with Compaction.compact: a compaction
     // holding this lock sees either the pre-batch or post-batch snapshot,
     // never a file appended between its directory scan and its swap
-    graft.operators.Artifacts.withDirLock(path) {
-      graft.operators.Artifacts.recoverSwap(path) // repair a crashed swap
-      val base =
-        if (java.nio.file.Files.exists(path)) spark.read.parquet(snapshotDir)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+    Artifacts.withDirLock(path) {
+      val base = Artifacts.readSnapshot(spark, path, batch.schema)
       val merged = base.join(batch.select(keyCol), Seq(keyCol), "left_anti")
         .unionByName(batch.filter(col(opCol) =!= deleteOp))
-      val next = java.nio.file.Paths.get(snapshotDir + ".next")
-      merged.write.mode("overwrite").parquet(next.toString)
-      // crash-safe publish: the previous snapshot is renamed aside, never
-      // deleted before the new one is in place (Artifacts.swapInto)
-      graft.operators.Artifacts.swapInto(path, next)
+      Artifacts.publish(path)(next =>
+        merged.write.mode("overwrite").parquet(next.toString))
     }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Kmv
+import graft.operators.Artifacts
 
 /** `foreachBatch` sink maintaining the DURABLE per-(event_type, day)
   * KMV sketch bank — the streaming ingest half of `agg_sketch_banked`:
@@ -26,7 +27,7 @@ import graft.functions.Kmv
   * events → one sketch row per touched (type, day)), a touched-keys
   * semi/anti split of the bank (bank rows are types × days — kilobytes
   * at any event volume), an in-row union for the touched rows, and one
-  * crash-safe snapshot publish ([[graft.operators.Artifacts.swapInto]]
+  * crash-safe snapshot publish ([[graft.operators.Artifacts.publish]]
   * under the bank's dir lock, same contract as [[MergeSink]]).
   */
 object SketchBankSink {
@@ -48,12 +49,8 @@ object SketchBankSink {
     // lock the bank dir itself (the MergeSink/Compaction convention:
     // every writer of a swap-managed dir takes <dir>.dirlock, so a
     // future compactor or second writer is mutually excluded)
-    graft.operators.Artifacts.withDirLock(bankPath) {
-      graft.operators.Artifacts.recoverSwap(bankPath)
-      val existing =
-        if (java.nio.file.Files.exists(bankPath)) spark.read.parquet(bankDir)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], delta.schema)
+    Artifacts.withDirLock(bankPath) {
+      val existing = Artifacts.readSnapshot(spark, bankPath, delta.schema)
       val keys = Seq("event_type", "day")
       val untouched = existing.join(delta.select(keys.map(col): _*),
         keys, "left_anti")
@@ -63,11 +60,8 @@ object SketchBankSink {
         .select(col("event_type"), col("day"), explode(col("sk")).as("h"))
         .groupBy(col("event_type"), col("day"))
         .agg(kmv(col("h")).as("sk"))
-      val next = bankPath.resolveSibling(s"${bankPath.getFileName}.next")
-      graft.operators.Artifacts.deleteRecursively(next)
-      untouched.unionByName(folded).coalesce(1)
-        .write.mode("overwrite").parquet(next.toString)
-      graft.operators.Artifacts.swapInto(bankPath, next)
+      Artifacts.publish(bankPath)(next => untouched.unionByName(folded)
+        .coalesce(1).write.mode("overwrite").parquet(next.toString))
     }
   }
 
@@ -79,9 +73,7 @@ object SketchBankSink {
     */
   def read(spark: SparkSession, bankDir: String): DataFrame = {
     val bankPath = java.nio.file.Paths.get(bankDir)
-    graft.operators.Artifacts.withDirLock(bankPath) {
-      graft.operators.Artifacts.recoverSwap(bankPath)
-    }
+    Artifacts.withDirLock(bankPath)(Artifacts.recoverSwap(bankPath))
     spark.read.parquet(bankDir)
   }
 }

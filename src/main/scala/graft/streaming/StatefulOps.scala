@@ -43,7 +43,7 @@ object StatefulOps {
     get_json_object(clusterTime, "$['$timestamp']['t']").cast("long") * 1000,
     unix_millis(try_to_timestamp(clusterTime)))
 
-  /** The document ops of the envelope ([[ChangeEvents.DocumentOps]] with a
+  /** The document ops of the envelope ([[ChangeEvents.opFilter]] with a
     * non-null `documentKey`) projected to [[KeyedChange]] columns.
     * Collection-level events (invalidate, drop, …) carry no document and
     * are the relay's dead letters, not state changes. Rows whose
@@ -52,9 +52,8 @@ object StatefulOps {
     * would otherwise fail at encode time).
     */
   private def keyedChanges(envelope: DataFrame): DataFrame =
-    envelope
-      .filter(col("operationType").isin(ChangeEvents.DocumentOps: _*) &&
-        col("documentKey").isNotNull)
+    ChangeEvents.opFilter(envelope)
+      .filter(col("documentKey").isNotNull)
       .select(
         col("documentKey"),
         col("operationType"),

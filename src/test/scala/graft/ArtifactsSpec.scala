@@ -3,15 +3,17 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Artifacts
 
 /** The durable-artifact contract behind SharedIvfIndex and
   * SharedBucketedTables: build once, reuse while the source fingerprint
-  * matches, rebuild atomically when the source changes.
+  * matches, rebuild atomically when the source changes. Also the
+  * snapshot contract of the streaming sinks: [[Artifacts.readSnapshot]]
+  * and [[Artifacts.publish]].
   */
-class ArtifactsSpec extends AnyFunSuite {
+class ArtifactsSpec extends SparkSpec {
 
   private def tempRoot() = {
     val parent = Files.createTempDirectory("artifacts_spec")
@@ -133,5 +135,43 @@ class ArtifactsSpec extends AnyFunSuite {
         Files.getLastModifiedTime(tbl).toMillis + 5000))
     assert(Artifacts.tableFingerprint(dir.toString, "t") !== fp1)
     Artifacts.deleteRecursively(dir)
+  }
+
+  test("a publish whose write throws leaves the previous snapshot and no .next") {
+    val dir = tempRoot()
+    Artifacts.publish(dir)(next => spark.range(3).write.parquet(next.toString))
+    intercept[IllegalStateException] {
+      Artifacts.publish(dir) { next =>
+        spark.range(5).write.parquet(next.toString)
+        throw new IllegalStateException("rewrite rejected")
+      }
+    }
+    assert(!Files.exists(dir.resolveSibling("artifact.next")),
+      "a failed publish must not leave its .next behind")
+    assert(spark.read.parquet(dir.toString).count() === 3,
+      "a failed publish must leave the previous snapshot in place")
+    Artifacts.deleteRecursively(dir.getParent)
+  }
+
+  test("readSnapshot restores the .old a crashed swap left behind") {
+    val dir = tempRoot()
+    // a crash between swapInto's two renames: only the aside-copy exists
+    val old = dir.resolveSibling("artifact.old")
+    spark.range(4).write.parquet(old.toString)
+    val snap = Artifacts.readSnapshot(spark, dir, StructType(Nil))
+    assert(Files.exists(dir) && !Files.exists(old))
+    assert(snap.count() === 4)
+    Artifacts.deleteRecursively(dir.getParent)
+  }
+
+  test("readSnapshot is an empty frame of the schema before any publish") {
+    val dir = tempRoot()
+    val schema = StructType(Seq(
+      StructField("k", StringType), StructField("v", LongType)))
+    val snap = Artifacts.readSnapshot(spark, dir, schema)
+    assert(snap.schema === schema)
+    assert(snap.count() === 0)
+    assert(!Files.exists(dir), "reading must not create the snapshot")
+    Artifacts.deleteRecursively(dir.getParent)
   }
 }

@@ -29,7 +29,7 @@ class RelayStreamingSpec extends SparkSpec {
     val input = MemoryStream[String]
     val envelope = ChangeEvents.parseEnvelope(input.toDF(), "value")
     val relayed = ChangeStreamRelay.relay(envelope)
-    val dead = ChangeStreamRelay.deadLetterStream(envelope)
+    val dead = ChangeEvents.deadLetter(envelope)
 
     val q = relayed.writeStream.format("memory").queryName("relay_out")
       .outputMode("append").start()

@@ -132,4 +132,16 @@ class SessionMemoSpec extends SparkSpec {
     assert(heavy(spark, "k")("h2") === "h2")
     assert(light(spark, "k")("l2") === "l1")
   }
+
+  test("a frames memo pins its frame at MEMORY_AND_DISK and evictAll unpins it") {
+    import org.apache.spark.storage.StorageLevel
+    val memo = SessionMemo.frames[String]
+    val df = memo(spark, "k")(spark.range(10).toDF("n"))
+    assert(df.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    assert(memo.pinnedFor(spark) === 1)
+    SessionMemo.evictAll(spark)
+    assert(memo.pinnedFor(spark) === 0, "a frames memo must evict in evictAll")
+    assert(df.storageLevel === StorageLevel.NONE,
+      "eviction must unpersist the pinned frame")
+  }
 }

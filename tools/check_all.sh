@@ -18,6 +18,12 @@ done
 # a schema is read from a footer, not learned by a Spark inference job
 ! grep -rnE 'read\.parquet\([^)]*\)\.schema' src/main \
   || { echo "src/main runs a Spark job only to learn a parquet schema" >&2; exit 1; }
+# a query pins a shared frame only through SessionMemo.frames
+! grep -rn '\.persist(' src/main/scala/graft/queries --exclude=SessionMemo.scala \
+  || { echo "a query persists a frame outside SessionMemo.frames" >&2; exit 1; }
+# a swap-managed snapshot is read only through Artifacts.readSnapshot
+! grep -rn 'emptyRDD' src/main --exclude=Artifacts.scala \
+  || { echo "src/main builds an empty snapshot outside Artifacts.readSnapshot" >&2; exit 1; }
 # every main builds its session through SparkEntry.localSession
 ! grep -rn 'SparkSession\.builder' src/main --exclude=SparkEntry.scala \
   || { echo "src/main builds a SparkSession outside SparkEntry.scala" >&2; exit 1; }
